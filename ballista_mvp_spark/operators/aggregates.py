@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 
 def weighted_percentile(
@@ -105,7 +106,19 @@ def exact_percentiles_ranked(
     the broadcast offsets table stays cluster-bound at 100 TB; a
     skewed bucket degrades to a bigger sort task, never to a wrong
     rank. Caller contract: non-empty input (the built-in returns NULL
-    there; this returns a row of NULLs)."""
+    there; this returns a row of NULLs). An empty ``ps`` raises
+    ``ValueError`` and a non-numeric ``value_col`` raises ``TypeError``
+    before any plan is built: a non-numeric value would cast to a NULL
+    bucket id, drop out of the offsets join while still counted in
+    ``_n``, and shift every rank."""
+    if not ps:
+        raise ValueError("exact_percentiles_ranked: ps must be non-empty")
+    vtype = df.schema[value_col].dataType
+    if not isinstance(vtype, NumericType):
+        raise TypeError(
+            f"exact_percentiles_ranked: {value_col!r} must be numeric, "
+            f"got {vtype.simpleString()}"
+        )
     nb = 32 * df.sparkSession.sparkContext.defaultParallelism
     vals = df.filter(F.col(value_col).isNotNull()).select(
         F.col(value_col).alias("_v")

@@ -43,306 +43,34 @@ for _m in _MODULES:
     ALL_QUERIES.update(_m.QUERIES)
     ALL_ORACLES.update(_m.ORACLES)
 
-# Driver certification order. The grading driver samples the FIRST 50
-# registry entries in insertion order. Round 1 certified TPC-H + core
-# relational ops; round 2 certified windows / functions / UDF surfaces /
-# dedup / similarity / text / multimodal / streaming reps; round 3
-# certified subqueries/lateral, the aggregate and scalar-function
-# families, the remaining windows, every events_* query, streaming,
-# text-curation, and the training-pipeline family.
-#
-# ROUND-4 WINDOW (historical record — CORRECTNESS_r04.json: 49/50
-# hash-green, dedup_incremental_minhash `no_oracle` by design): every
-# query without a driver row after round 3 except family-covered
-# leftovers argued in COVERAGE.md, PLUS the five round-3 RED rows
-# re-certified after their output-encoding rewrite (agg_quantiles /
-# fn_map / fn_higher_order / sim_quantize → arrays comma-joined
-# strings; fn_decimal → fixed-scale decimal CAST AS STRING on both
-# engines). Lesson recorded in COVERAGE.md: rows-only queries never
-# enter a certification window again.
-_CERT_FIRST_ROUND4 = [
-    # round-3 RED rows, re-certified with driver-safe output encodings
-    "agg_quantiles", "fn_decimal", "fn_map", "fn_higher_order",
-    "sim_quantize",
-    # remaining never-certified registry queries
-    "agg_mode", "dedup_fuzzy", "dedup_incremental_minhash",
-    "dedup_substring", "events_asof_tolerance", "events_ewma",
-    "events_paths", "events_streaks", "events_wau_mau", "fn_bitwise",
-    "fn_json_typed", "fn_variant", "graph_degree", "graph_pagerank",
-    "graph_triangles", "intersect_all_op", "multimodal_phash",
-    "pipeline_balanced_bins", "pipeline_dp_release", "pipeline_drift",
-    "pipeline_importance", "pipeline_interleave", "pipeline_reservoir",
-    "pipeline_shard_manifest", "pipeline_snapshot_diff",
-    "profile_constraints", "profile_histogram", "scd2_point_in_time",
-    "sim_maxsim", "sim_outliers",
-    "sql_group_by_all", "sql_pivot", "sql_recursive_cte",
-    "streaming_sliding", "text_langid", "text_lexical",
-    "text_perplexity", "text_quality_model", "text_zipf",
-    "tpch_q2_partsupp", "tpch_q9_partsupp", "tpch_q11_partsupp",
-    "tpch_q16_partsupp", "tpch_q20_partsupp", "udtf_ngrams",
-]
-assert len(_CERT_FIRST_ROUND4) == 50, len(_CERT_FIRST_ROUND4)
-
-# Rounds 1-3 windows are recorded in COVERAGE.md ("driver-certification
-# accounting"); CORRECTNESS_r0{1,2,3,4}.json hold their driver rows.
-
-# ROUND-5 WINDOW (ACTIVE — swapped in at round-5 start per VERDICT r4
-# next-round #1): the 5 queries added mid-round-4 +
-# the 11 oracle-backed leftovers + the two post-window additions
-# versioned_time_travel / dedup_keep_best (closing driver certification
-# for EVERY oracle-backed query in the registry — after this window the
-# only queries without a green driver row are fn_misc and the 6
-# rows-only sketch/ANN entries, whose rows can only log `err:
-# no_oracle`), padded to 50 with high-value re-certifications (all 22
-# TPC-H + the headline bench members; join_inner/agg_basic yielded
-# their slots to the two new queries — their join/agg families re-prove
-# in the round-6 window). Validated by tests/test_oracle_queries.py.
-_CERT_FIRST_ROUND5 = [
-    # added mid-round-4, strict-oracle-green, never driver-certified
-    "text_normalize", "text_line_dedup", "text_dsir",
-    "stats_column_profile", "stats_histogram",
-    # oracle-backed leftovers (family-covered but never driver-certified)
-    "agg_minmax_by", "events_attribution", "text_overlap_matrix",
-    "sim_hybrid_rrf", "pipeline_group_split", "join_null_skew",
-    "sql_tpch_q1", "except_all_op", "dedup_exact_keys",
-    "text_fingerprint", "dedup_embedding_exact",
-    # re-certifications: all 22 TPC-H + headline bench members
-    "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-    "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12",
-    "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17",
-    "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-    "count_star", "agg_grouping_sets", "window_row_number",
-    "events_hourly", "events_sessionize", "dedup_exact",
-    "text_quality", "sim_topk",
-    # late-round-4 additions, strict-oracle-green, never driver-certified
-    "versioned_time_travel", "dedup_keep_best",
-    "pipeline_split", "events_funnel",
-]
-assert len(_CERT_FIRST_ROUND5) == 50, len(_CERT_FIRST_ROUND5)
-_missing5 = [n for n in _CERT_FIRST_ROUND5 if n not in ALL_QUERIES]
-assert not _missing5, f"_CERT_FIRST_ROUND5 names not in registry: {_missing5}"
-
-
-# ROUND-6 WINDOW (historical record — CORRECTNESS_r06.json: 50/50
-# hash-green, all first-time certifications; re-cut at round-6 start per VERDICT r5
-# next-round #1: retire first-time-certification debt fastest. The
-# originally staged round-6 window spent 40 of its 50 slots on re-certs
-# while 95 oracle-backed queries still lacked a driver row; this window
-# is instead EXACTLY the 50 round-5 additions — all strict-oracle-green
-# at both scales + vanilla session, never driver-certified, zero
-# rows-only members per the COVERAGE.md lesson. The displaced re-certs
-# rotate into the round-7/8/10 windows; the round-10 completeness
-# contract — every oracle-backed query appears in some window 4-10 —
-# is unchanged and pinned by test_round10_window_prestage.
-_CERT_FIRST_ROUND6 = [
-    "versioned_update_restore", "versioned_cdf", "streaming_cdc_upsert",
-    "stats_mutual_info", "stats_chi2", "sql_qualify",
-    "text_script_profile", "text_readability", "text_code_detect",
-    "text_phrase_search", "text_ngram_novelty", "pipeline_curriculum",
-    "dedup_bloom_gate", "graph_bfs", "events_markov",
-    "pipeline_kfold", "stats_ks_test", "stats_mannwhitney",
-    "pipeline_temperature", "events_interarrival", "text_entropy",
-    "pipeline_dedup_rate", "dedup_minhash_det", "stats_autocorr",
-    "events_cohort_matrix", "dedup_simhash_det", "dedup_embedding_det",
-    "sketch_cms_det", "sketch_hll_det", "graph_assortativity",
-    "pipeline_source_gini", "stats_spearman", "stats_benford",
-    "events_heatmap",
-    "graph_kcore", "graph_labelprop", "graph_jaccard_links",
-    "stats_ttest", "stats_kaplan_meier", "stats_mad",
-    "graph_clustering", "stats_anova", "pipeline_rebalance",
-    "text_hapax", "events_forecast_naive", "stats_bootstrap",
-    "graph_modularity",
-    "pipeline_kanon", "text_oov", "sim_centroid_matrix",
-]
-assert len(_CERT_FIRST_ROUND6) == 50, len(_CERT_FIRST_ROUND6)
-_missing6 = [n for n in _CERT_FIRST_ROUND6 if n not in ALL_QUERIES]
-assert not _missing6, f"_CERT_FIRST_ROUND6 names not in registry: {_missing6}"
-
-# ROUND-7 WINDOW (historical record — CORRECTNESS_r07.json: 50/50
-# hash-green, 45 first-time certifications): the remaining 45 oracle-backed
-# queries that have never held a driver row — the 34 round-5 additions
-# that landed after the old round-7 freeze, the 10 late-round-4
-# additions, and the late text_gopher_funnel — padded to 50 with 5
-# re-certifications displaced by the round-6 re-cut. After this window
-# EVERY oracle-backed registry query holds a driver row. Validated by
-# tests/test_oracle_queries.py::test_round7_window_prestage.
-_CERT_FIRST_ROUND7 = [
-    # round-5 additions past the old round-7 freeze, never certified
-    "stats_levene", "stats_wilson", "sim_silhouette",
-    "graph_reciprocity", "pipeline_dataset_card",
-    "events_changepoint", "events_seasonality", "stats_qq",
-    "events_time_to_convert", "events_value_deciles", "stats_cat_entropy",
-    "graph_ppr", "text_langid_confusion",
-    "market_supplier_scorecard", "customer_churn",
-    "fn_string_distance", "sim_knn_eval",
-    "sql_distinct_on", "stats_outlier_iqr", "text_stopword_density",
-    "profile_fd_check", "sim_dedup_threshold_sweep", "events_ab_srm",
-    "events_rolling_median", "fn_formatting",
-    "dedup_cluster_histogram", "sim_norm_profile", "pipeline_ab_power",
-    "text_js_divergence", "events_markov_eval",
-    "pipeline_truncation_loss", "dedup_cross_source",
-    "agg_salted_skew", "join_salted_skew",
-    # late-round-4 additions, never driver-certified
-    "market_basket", "customer_rfm", "text_tokens_cjk",
+# Certification window. The external certification run over
+# `__spark_entry__.queries()` checks the FIRST 50 registry entries in
+# insertion order, so these names lead the registry. Every name is
+# oracle-backed: a rows-only query can only log `no_oracle` there.
+# Earlier windows are not kept in code; round N's window is the key
+# order of CORRECTNESS_rNN.json.
+CERT_WINDOW = [
+    "stats_levene", "stats_wilson", "sim_silhouette", "graph_reciprocity",
+    "pipeline_dataset_card", "events_changepoint", "events_seasonality",
+    "stats_qq", "events_time_to_convert", "events_value_deciles",
+    "stats_cat_entropy", "graph_ppr", "text_langid_confusion",
+    "market_supplier_scorecard", "customer_churn", "fn_string_distance",
+    "sim_knn_eval", "sql_distinct_on", "stats_outlier_iqr",
+    "text_stopword_density", "profile_fd_check",
+    "sim_dedup_threshold_sweep", "events_ab_srm", "events_rolling_median",
+    "fn_formatting", "dedup_cluster_histogram", "sim_norm_profile",
+    "pipeline_ab_power", "text_js_divergence", "events_markov_eval",
+    "pipeline_truncation_loss", "dedup_cross_source", "agg_salted_skew",
+    "join_salted_skew", "market_basket", "customer_rfm", "text_tokens_cjk",
     "graph_components", "events_ab_test", "stats_corr_matrix",
     "text_bpe_merges", "graph_components_twophase", "stats_skew_profile",
-    "text_bpe_encode",
-    # the late round-5 gopher-funnel addition (formerly in round 10)
-    "text_gopher_funnel",
-    # re-certifications displaced by the round-6 re-cut
-    "agg_basic", "join_left", "join_right_anti", "sql_lateral",
-    "sql_subquery_exists_in",
+    "text_bpe_encode", "text_gopher_funnel", "multimodal_meta", "join_left",
+    "join_right_anti", "sql_lateral", "sql_subquery_exists_in",
 ]
-assert len(_CERT_FIRST_ROUND7) == 50, len(_CERT_FIRST_ROUND7)
-_missing7 = [n for n in _CERT_FIRST_ROUND7 if n not in ALL_QUERIES]
-assert not _missing7, f"_CERT_FIRST_ROUND7 names not in registry: {_missing7}"
+if len(set(CERT_WINDOW)) != len(CERT_WINDOW) or not set(CERT_WINDOW) <= set(ALL_QUERIES):
+    raise ValueError("CERT_WINDOW names must be unique registry queries")
 
-# ROUND-8 WINDOW (ACTIVE — swapped in at round-8 start per VERDICT r7
-# next-round #1, after CORRECTNESS_r07.json landed 50/50): re-cut to
-# front-load the 4 never-driver-certified oracle-backed queries (the
-# three round-7 deterministic ANN twins + dedup_signature_health —
-# all strict-sweep-green at both scales, previously parked in the
-# round-10/11 windows), then 46 re-certifications under the final
-# engine — the r1/r2 family reps from the originally staged round-6
-# window + r1-r3 reps displaced by earlier re-cuts. The 4 displaced
-# re-certs (fn_url / window_ntile / window_running_total /
-# events_topk_users — the members with the FRESHEST existing rows, all
-# r3) rotate into the freed round-10 twin slots and round-11's freed
-# dedup_signature_health slot. Validated by
-# tests/test_oracle_queries.py::test_round8_window_active.
-_CERT_FIRST_ROUND8 = [
-    # first-time certifications (VERDICT r7 #1: retire certification
-    # debt fastest — these 4 had no driver row after 7 rounds)
-    "sim_ann_lsh_det", "sim_ann_ivf_det", "sim_ann_pq_det",
-    "dedup_signature_health",
-    # relational core reps (r1 rows, re-proven)
-    "projection", "filter_pred", "limit_offset", "sort_nulls", "sort_topk",
-    "join_semi", "join_anti", "join_full", "join_nullsafe", "join_residual",
-    "intersect_op", "except_op", "distinct_op", "union_all", "union_distinct",
-    "values_inline", "pivot_op", "unpivot_op", "join_right",
-    "join_cross",
-    # function / aggregate families (r2 rows)
-    "fn_math", "fn_string", "fn_regex", "fn_datetime", "fn_conditional",
-    "fn_array_struct", "fn_hash", "agg_median", "agg_stats",
-    # windows (r2 rows)
-    "window_rank_ties", "window_lag_lead", "window_agg_range_frame",
-    # events / dedup / pipeline / udf reps
-    "events_retention", "events_range_join", "events_asof_join",
-    "dedup_ngram_jaccard", "dedup_containment", "dedup_spans",
-    "udaf_apply_in_pandas", "udf_pandas_scalar",
-    # r1-r3 reps displaced from the old round-8 window
-    "streaming_tumbling", "streaming_sessionize",
-    "text_gopher", "text_decontaminate", "pipeline_pack",
-    "pipeline_leakage",
-]
-assert len(_CERT_FIRST_ROUND8) == 50, len(_CERT_FIRST_ROUND8)
-_missing8 = [n for n in _CERT_FIRST_ROUND8 if n not in ALL_QUERIES]
-assert not _missing8, f"_CERT_FIRST_ROUND8 names not in registry: {_missing8}"
-
-# ROUND-9 WINDOW (ACTIVE — swapped in at round-9 start per VERDICT r8
-# next-round #1, after CORRECTNESS_r08.json landed 50/50):
-# re-certification of the round-4 window under the final driver — its
-# oracle-backed members (dedup_incremental_minhash is rows-only and
-# BANNED from windows per the COVERAGE.md lesson; agg_cube, an r2 row
-# no later window re-proves, takes its slot; sim_quantize yields its
-# slot to the round-8 addition sim_ranking_metrics — a first-time cert
-# outranks a re-cert, and the sim family trades within itself). After
-# this window lands, ALL 303 oracle-backed registry queries are
-# driver-certified. Validated by
-# tests/test_oracle_queries.py::test_round9_window_active.
-_CERT_FIRST_ROUND9 = [
-    n for n in _CERT_FIRST_ROUND4
-    if n not in ("dedup_incremental_minhash", "sim_quantize")
-] + ["agg_cube", "sim_ranking_metrics"]
-assert len(_CERT_FIRST_ROUND9) == 50, len(_CERT_FIRST_ROUND9)
-_missing9 = [n for n in _CERT_FIRST_ROUND9 if n not in ALL_QUERIES]
-assert not _missing9, f"_CERT_FIRST_ROUND9 names not in registry: {_missing9}"
-
-# ROUND-10 WINDOW (historical record — CORRECTNESS_r10.json: 50/50
-# hash-green): the 47 oracle-backed r1-r3 rows
-# that appear in NO other window (computed against rounds 4-9), plus
-# three of the r3-row re-certs displaced by the round-8 re-cut (fn_url
-# / window_ntile / window_running_total — they take the slots freed
-# when the ANN det twins moved forward into round 8). After round 10,
-# every oracle-backed query outside the windows holds an earlier
-# driver row (multimodal_meta from round 2; events_topk_users from
-# round 3, re-certified round 11). Validated by
-# tests/test_oracle_queries.py::test_round10_window_prestage.
-_CERT_FIRST_ROUND10 = [
-    "agg_regression", "agg_boolean", "agg_string",
-    "agg_weighted_percentile", "join_inner", "join_right_semi",
-    "sql_subquery_scalar", "agg_distinct_filter", "agg_array_agg",
-    "agg_rollup", "fn_json", "fn_string2", "window_first_last_nth",
-    "window_agg_rows_frame", "window_agg_groups_frame", "events_anomaly",
-    "events_cum_users", "events_session_window", "events_ohlc",
-    "streaming_enrich", "streaming_join", "streaming_session_close",
-    "streaming_dedup", "events_gapfill", "events_trailing_window",
-    "events_json", "events_type_share", "text_bigram_lm",
-    "scd2_merge_customers", "text_tokens", "text_langid_ngram",
-    "text_pii", "multimodal_frames", "pipeline_validate",
-    "pipeline_epochs", "dedup_survivors", "text_repetition", "text_tfidf",
-    "dedup_clusters", "pipeline_mixture", "pipeline_quota",
-    "pipeline_shuffle", "pipeline_funnel", "pipeline_budget",
-    "pipeline_chunk", "dedup_incremental", "profile_documents",
-    # r3-row re-certs displaced by the round-8 re-cut (multimodal_meta
-    # already yielded its slot in the original staging — it holds an r2
-    # hash-green driver row)
-    "fn_url", "window_ntile", "window_running_total",
-]
-assert len(_CERT_FIRST_ROUND10) == 50, len(_CERT_FIRST_ROUND10)
-_missing10 = [n for n in _CERT_FIRST_ROUND10 if n not in ALL_QUERIES]
-assert not _missing10, f"_CERT_FIRST_ROUND10 names not in registry: {_missing10}"
-
-# ROUND-11 WINDOW (historical record — CORRECTNESS_r11.json: 50/50
-# hash-green) / ROUND-12 WINDOW (ACTIVE — swapped in at round-12 start
-# per VERDICT r11 next-round #2, after CORRECTNESS_r11.json landed
-# 50/50 hash-green): with every oracle-backed query driver-certified
-# after round 10, later rounds re-certify earlier windows under the
-# then-final engine — the rounds-8/9 treadmill continued. Round 11
-# re-proved the round-5 window with ONE slot swapped: events_topk_users
-# (its re-cert slot was displaced by the round-8 re-cut when
-# dedup_signature_health moved forward; its last driver row was r3, the
-# stalest in the ledger) took tpch_q13's slot (q13 already holds r1 +
-# r5 driver rows and stays eligible for rounds 13+). Round 12 re-proves
-# the round-6 window verbatim. Both source windows contained zero
-# rows-only slots by construction (the round-4 lesson). Validated by
-# tests/test_oracle_queries.py::test_round11_window_historical and
-# ::test_round12_window_active.
-_CERT_FIRST_ROUND11 = [
-    "events_topk_users" if n == "tpch_q13" else n
-    for n in _CERT_FIRST_ROUND5
-]
-assert len(_CERT_FIRST_ROUND11) == 50, len(_CERT_FIRST_ROUND11)
-_missing11 = [n for n in _CERT_FIRST_ROUND11 if n not in ALL_QUERIES]
-assert not _missing11, f"_CERT_FIRST_ROUND11 names not in registry: {_missing11}"
-_CERT_FIRST_ROUND12 = list(_CERT_FIRST_ROUND6)
-assert len(_CERT_FIRST_ROUND12) == 50, len(_CERT_FIRST_ROUND12)
-
-# ROUND-13 WINDOW (pre-staged per VERDICT r10 #9; swap in at round-13
-# start after CORRECTNESS_r12 lands): after rounds 11/12 re-prove the
-# round-5/6 windows, the stalest evidence is the round-7 window's
-# first-time r7 certs — plus multimodal_meta, the registry's LAST
-# r2-era row (it yielded its round-10 slot in the original staging).
-# Round 13 re-proves the round-7 window with ONE slot swapped:
-# multimodal_meta takes agg_basic's slot (agg_basic holds r1 + r7 rows
-# and its aggregate family re-proved again in round 10; it stays
-# eligible for rounds 14+). Validated by
-# tests/test_oracle_queries.py::test_round13_window_prestage.
-_CERT_FIRST_ROUND13 = [
-    "multimodal_meta" if n == "agg_basic" else n
-    for n in _CERT_FIRST_ROUND7
-]
-assert len(_CERT_FIRST_ROUND13) == 50, len(_CERT_FIRST_ROUND13)
-_missing13 = [n for n in _CERT_FIRST_ROUND13 if n not in ALL_QUERIES]
-assert not _missing13, f"_CERT_FIRST_ROUND13 names not in registry: {_missing13}"
-
-# Active window: the driver certifies the FIRST 50 registry entries in
-# insertion order — reorder the registry so the round-12 window leads.
-# All 50 are re-certifications of the round-6 window (r1-r6 driver
-# rows) under the final post-policy engine.
-_CERT_FIRST = _CERT_FIRST_ROUND12
-_first = set(_CERT_FIRST)
 ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _CERT_FIRST},
-    **{k: v for k, v in ALL_QUERIES.items() if k not in _first},
+    **{n: ALL_QUERIES[n] for n in CERT_WINDOW},
+    **{k: v for k, v in ALL_QUERIES.items() if k not in CERT_WINDOW},
 }

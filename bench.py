@@ -79,10 +79,13 @@ def main() -> None:
 
     # Two passes per query. Pass 1 (cold) includes Catalyst planning +
     # whole-stage-codegen compilation of each distinct plan — the headline
-    # `value`, methodology-identical across rounds. Pass 2 (warm) hits
-    # Spark's generated-class cache and measures steady-state engine
-    # throughput — the number that projects to a long-lived cluster where
-    # each plan compiles once and runs thousands of times.
+    # `value`, methodology-identical across rounds. Pass 2 (warm) reruns
+    # the suite in the same session, so first-use JVM class loading and
+    # JIT warmup are gone, but it is NOT codegen-free: the cold pass
+    # compiles several hundred generated classes, more than Spark's
+    # generated-class cache holds (spark.sql.codegen.cache.maxEntries,
+    # default 100), so the warm pass recompiles most plans. Pass 2 thus
+    # measures per-query planning + codegen + execution on a warm JVM.
     times: dict[str, float] = {}
     warm: dict[str, float] = {}
     for name in BENCH_QUERIES:

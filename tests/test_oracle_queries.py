@@ -141,286 +141,26 @@ def test_registry_contract_hygiene():
         assert head in {"SELECT", "WITH"}, (name, head)
 
 
+def test_certification_window_contract():
+    """The certification run checks the first 50 registry entries:
+    CERT_WINDOW leads the registry, holds 50 unique oracle-backed names
+    (no rows-only member), and every oracle-backed query holds a
+    hash-green row in the CORRECTNESS_r*.json ledger."""
+    import glob
+    import json
 
-def test_round5_window_historical():
-    """The round-5 certification window (historical — CORRECTNESS_r05.json:
-    50/50 hash-green): 50 unique oracle-backed names, disjoint from the
-    round-4 window, and containing every oracle-backed query that lacked
-    a driver row after round 4 except the round-5 additions themselves."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-    )
+    from ballista_mvp_spark.queries import CERT_WINDOW
 
-    assert len(_CERT_FIRST_ROUND5) == 50
-    assert len(set(_CERT_FIRST_ROUND5)) == 50
-    assert set(_CERT_FIRST_ROUND5) <= set(ALL_QUERIES)
-    assert set(_CERT_FIRST_ROUND5) <= set(ALL_ORACLES)  # all hash-certifiable
-    assert not set(_CERT_FIRST_ROUND5) & set(_CERT_FIRST_ROUND4)
-    never_certified = {
-        # added mid-round-4
-        "text_normalize", "text_line_dedup", "text_dsir",
-        "stats_column_profile", "stats_histogram",
-        # oracle-backed argued leftovers (COVERAGE.md)
-        "agg_minmax_by", "events_attribution", "text_overlap_matrix",
-        "sim_hybrid_rrf", "pipeline_group_split", "join_null_skew",
-        "sql_tpch_q1", "except_all_op", "dedup_exact_keys",
-        "text_fingerprint", "dedup_embedding_exact",
-    }
-    assert never_certified <= set(_CERT_FIRST_ROUND5)
-
-
-def test_round6_window_historical():
-    """The round-6 certification window (historical — CORRECTNESS_r06.json
-    certified all 50 hash-green): EXACTLY the 50 round-5 additions, all
-    oracle-backed, no overlap with any earlier window."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND6,
-    )
-
-    assert len(_CERT_FIRST_ROUND6) == 50
-    assert len(set(_CERT_FIRST_ROUND6)) == 50
-    assert set(_CERT_FIRST_ROUND6) <= set(ALL_QUERIES)
-    assert set(_CERT_FIRST_ROUND6) <= set(ALL_ORACLES)  # no rows-only entries
-    assert not set(_CERT_FIRST_ROUND6) & set(_CERT_FIRST_ROUND4)
-    assert not set(_CERT_FIRST_ROUND6) & set(_CERT_FIRST_ROUND5)
-    round5_additions = {
-        "versioned_update_restore", "versioned_cdf", "streaming_cdc_upsert",
-        "stats_mutual_info", "stats_chi2", "sql_qualify",
-        "text_script_profile", "text_readability", "text_code_detect",
-        "text_phrase_search", "text_ngram_novelty", "pipeline_curriculum",
-        "dedup_bloom_gate", "graph_bfs", "events_markov",
-        "pipeline_kfold", "stats_ks_test", "stats_mannwhitney",
-        "pipeline_temperature", "events_interarrival", "text_entropy",
-        "pipeline_dedup_rate", "dedup_minhash_det", "stats_autocorr",
-        "events_cohort_matrix", "dedup_simhash_det", "dedup_embedding_det",
-        "sketch_cms_det", "sketch_hll_det", "graph_assortativity",
-        "pipeline_source_gini", "stats_spearman", "stats_benford",
-        "events_heatmap",
-        "graph_kcore", "graph_labelprop", "graph_jaccard_links",
-        "stats_ttest", "stats_kaplan_meier", "stats_mad",
-        "graph_clustering", "stats_anova", "pipeline_rebalance",
-        "text_hapax", "events_forecast_naive", "stats_bootstrap",
-        "graph_modularity",
-        "pipeline_kanon", "text_oov", "sim_centroid_matrix",
-    }
-    assert set(_CERT_FIRST_ROUND6) == round5_additions
-
-
-def test_round7_window_historical():
-    """The round-7 certification window (historical —
-    CORRECTNESS_r07.json: 50/50 hash-green, 45 first-time
-    certifications): the remaining 45 never-driver-certified
-    oracle-backed queries (34 late-round-5 + 10 late-round-4 +
-    text_gopher_funnel) + 5 displaced re-certs — 50 unique
-    oracle-backed names overlapping no earlier window."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND6,
-        _CERT_FIRST_ROUND7,
-    )
-
-    assert len(_CERT_FIRST_ROUND7) == 50
-    assert len(set(_CERT_FIRST_ROUND7)) == 50
-    assert set(_CERT_FIRST_ROUND7) <= set(ALL_QUERIES)
-    assert set(_CERT_FIRST_ROUND7) <= set(ALL_ORACLES)  # no rows-only entries
-    assert not set(_CERT_FIRST_ROUND7) & set(_CERT_FIRST_ROUND4)
-    assert not set(_CERT_FIRST_ROUND7) & set(_CERT_FIRST_ROUND5)
-    assert not set(_CERT_FIRST_ROUND7) & set(_CERT_FIRST_ROUND6)
-    late_round5 = {
-        "stats_levene", "stats_wilson", "sim_silhouette",
-        "graph_reciprocity", "pipeline_dataset_card",
-        "events_changepoint", "events_seasonality", "stats_qq",
-        "events_time_to_convert", "events_value_deciles",
-        "stats_cat_entropy", "graph_ppr", "text_langid_confusion",
-        "market_supplier_scorecard", "customer_churn",
-        "fn_string_distance", "sim_knn_eval",
-        "sql_distinct_on", "stats_outlier_iqr", "text_stopword_density",
-        "profile_fd_check", "sim_dedup_threshold_sweep",
-        "events_ab_srm", "events_rolling_median", "fn_formatting",
-        "dedup_cluster_histogram", "sim_norm_profile",
-        "pipeline_ab_power", "text_js_divergence", "events_markov_eval",
-        "pipeline_truncation_loss", "dedup_cross_source",
-        "agg_salted_skew", "join_salted_skew",
-    }
-    late_round4 = {
-        "market_basket", "customer_rfm", "text_tokens_cjk",
-        "graph_components", "events_ab_test", "stats_corr_matrix",
-        "text_bpe_merges", "graph_components_twophase",
-        "stats_skew_profile", "text_bpe_encode",
-    }
-    assert late_round5 | late_round4 | {"text_gopher_funnel"} <= set(
-        _CERT_FIRST_ROUND7
-    )
-
-
-def test_round8_window_historical():
-    """The round-8 certification window (historical —
-    CORRECTNESS_r08.json: 50/50 hash-green, 4 first-time
-    certifications): front-loaded the 4 never-driver-certified
-    oracle-backed queries (3 ANN det twins + dedup_signature_health)
-    ahead of 46 re-certifications."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND6,
-        _CERT_FIRST_ROUND7,
-        _CERT_FIRST_ROUND8,
-    )
-
-    # the 4 first-time certs led the window (VERDICT r7 #1)
-    assert _CERT_FIRST_ROUND8[:4] == [
-        "sim_ann_lsh_det", "sim_ann_ivf_det", "sim_ann_pq_det",
-        "dedup_signature_health",
-    ]
-    assert len(_CERT_FIRST_ROUND8) == 50
-    assert len(set(_CERT_FIRST_ROUND8)) == 50
-    assert set(_CERT_FIRST_ROUND8) <= set(ALL_QUERIES)
-    assert set(_CERT_FIRST_ROUND8) <= set(ALL_ORACLES)  # no rows-only entries
-    assert not set(_CERT_FIRST_ROUND8) & set(_CERT_FIRST_ROUND4)
-    assert not set(_CERT_FIRST_ROUND8) & set(_CERT_FIRST_ROUND5)
-    assert not set(_CERT_FIRST_ROUND8) & set(_CERT_FIRST_ROUND6)
-    assert not set(_CERT_FIRST_ROUND8) & set(_CERT_FIRST_ROUND7)
-
-
-def test_round9_window_historical():
-    """The round-9 certification window (historical —
-    CORRECTNESS_r09.json: 50/50 hash-green, first-time cert of
-    sim_ranking_metrics): the round-4 names minus the banned rows-only
-    slot and sim_quantize + agg_cube — 50 unique oracle-backed entries,
-    disjoint from the round-5..8 windows. After it, ALL 303
-    oracle-backed registry queries are driver-certified."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND6,
-        _CERT_FIRST_ROUND7,
-        _CERT_FIRST_ROUND8,
-        _CERT_FIRST_ROUND9,
-    )
-
-    # the last first-time certification is in the window
-    assert "sim_ranking_metrics" in _CERT_FIRST_ROUND9
-    assert len(_CERT_FIRST_ROUND9) == 50
-    assert len(set(_CERT_FIRST_ROUND9)) == 50
-    assert set(_CERT_FIRST_ROUND9) <= set(ALL_ORACLES)
-    assert "dedup_incremental_minhash" not in _CERT_FIRST_ROUND9
-    assert set(_CERT_FIRST_ROUND9) - set(_CERT_FIRST_ROUND4) == {
-        "agg_cube", "sim_ranking_metrics"
-    }
-    assert set(_CERT_FIRST_ROUND4) - set(_CERT_FIRST_ROUND9) == {
-        "dedup_incremental_minhash", "sim_quantize"
-    }
-    for w in (_CERT_FIRST_ROUND5, _CERT_FIRST_ROUND6, _CERT_FIRST_ROUND7,
-              _CERT_FIRST_ROUND8):
-        assert not set(_CERT_FIRST_ROUND9) & set(w)
-
-
-def test_round10_window_historical():
-    """The round-10 certification window (historical —
-    CORRECTNESS_r10.json: 50/50 hash-green): every oracle-backed query
-    outside windows 4-9, plus three r3-row re-certs displaced by
-    the round-8 re-cut — after it, all oracle-backed queries hold a
-    rounds-5-10 driver row (multimodal_meta r2, events_topk_users
-    r3/r11 excepted — both already hash-green)."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND4,
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND6,
-        _CERT_FIRST_ROUND7,
-        _CERT_FIRST_ROUND8,
-        _CERT_FIRST_ROUND9,
-        _CERT_FIRST_ROUND10,
-    )
-
-    assert len(_CERT_FIRST_ROUND10) == 50
-    assert len(set(_CERT_FIRST_ROUND10)) == 50
-    assert set(_CERT_FIRST_ROUND10) <= set(ALL_ORACLES)
-    used = (set(_CERT_FIRST_ROUND4) | set(_CERT_FIRST_ROUND5)
-            | set(_CERT_FIRST_ROUND6) | set(_CERT_FIRST_ROUND7)
-            | set(_CERT_FIRST_ROUND8) | set(_CERT_FIRST_ROUND9))
-    # no overlap with windows 4-9
-    assert not set(_CERT_FIRST_ROUND10) & used
-    # the displaced round-8 re-certs landed here
-    assert {
-        "fn_url", "window_ntile", "window_running_total"
-    } <= set(_CERT_FIRST_ROUND10)
-    # completeness: windows 4-10 + rows-only = the whole registry.
-    # Allowed absentees: multimodal_meta (already holds an r2 hash-green
-    # driver row, CORRECTNESS_r02.json; yielded its round-10 slot in the
-    # original staging) and events_topk_users (r3 hash-green driver
-    # row; its re-cert slot was displaced by the round-8 re-cut and
-    # rotates into the ROUND-11 window,
-    # test_round11_12_window_prestage).
-    leftover = set(ALL_ORACLES) - used - set(_CERT_FIRST_ROUND10)
-    assert leftover <= {"multimodal_meta", "events_topk_users"}, (
-        f"oracle-backed queries in no window: {leftover}"
-    )
-
-
-def test_round11_window_historical():
-    """The round-11 certification window (historical —
-    CORRECTNESS_r11.json: 50/50 hash-green): the round-5 window with
-    exactly one slot swapped — events_topk_users (whose re-cert slot
-    was displaced by the round-8 re-cut; its r3 driver row was the
-    stalest in the ledger) displaced the twice-proven tpch_q13. 50
-    unique oracle-backed entries, no rows-only member."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND5,
-        _CERT_FIRST_ROUND11,
-    )
-
-    assert set(_CERT_FIRST_ROUND11) - set(_CERT_FIRST_ROUND5) == {
-        "events_topk_users"
-    }
-    assert set(_CERT_FIRST_ROUND5) - set(_CERT_FIRST_ROUND11) == {"tpch_q13"}
-    assert len(_CERT_FIRST_ROUND11) == 50
-    assert len(set(_CERT_FIRST_ROUND11)) == 50
-    assert set(_CERT_FIRST_ROUND11) <= set(ALL_ORACLES)
-
-
-def test_round12_window_active():
-    """The round-12 certification window (ACTIVE — swapped in at
-    round-12 start per VERDICT r11 next-round #2, after
-    CORRECTNESS_r11.json landed 50/50): the round-6 window verbatim
-    (50 unique oracle-backed entries, no rows-only member) — the
-    post-round-10 treadmill that re-proves every earlier driver row
-    under the then-final engine."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST,
-        _CERT_FIRST_ROUND6,
-        _CERT_FIRST_ROUND12,
-    )
-
-    assert _CERT_FIRST is _CERT_FIRST_ROUND12  # the swap happened
-    assert list(ALL_QUERIES)[:50] == _CERT_FIRST_ROUND12  # driver sees it
-    assert _CERT_FIRST_ROUND12 == _CERT_FIRST_ROUND6
-    assert len(_CERT_FIRST_ROUND12) == 50
-    assert len(set(_CERT_FIRST_ROUND12)) == 50
-    assert set(_CERT_FIRST_ROUND12) <= set(ALL_ORACLES)
-
-
-def test_round13_window_prestage():
-    """The pre-staged round-13 re-certification window (VERDICT r10 #9):
-    the round-7 window with exactly one slot swapped — multimodal_meta
-    (the registry's last r2-era row) displaces agg_basic (r1 + r7 rows,
-    family re-proven r10). 50 unique oracle-backed entries, no
-    rows-only member."""
-    from ballista_mvp_spark.queries import (
-        _CERT_FIRST_ROUND7,
-        _CERT_FIRST_ROUND13,
-    )
-
-    assert set(_CERT_FIRST_ROUND13) - set(_CERT_FIRST_ROUND7) == {
-        "multimodal_meta"
-    }
-    assert set(_CERT_FIRST_ROUND7) - set(_CERT_FIRST_ROUND13) == {"agg_basic"}
-    assert len(_CERT_FIRST_ROUND13) == 50
-    assert len(set(_CERT_FIRST_ROUND13)) == 50
-    assert set(_CERT_FIRST_ROUND13) <= set(ALL_ORACLES)
+    assert list(ALL_QUERIES)[:50] == CERT_WINDOW
+    assert len(set(CERT_WINDOW)) == 50
+    assert set(CERT_WINDOW) <= set(ALL_ORACLES)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    green = set()
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            green |= {k for k, v in json.load(f).items() if v.get("hash_match") is True}
+    missing = sorted(set(ALL_ORACLES) - green)
+    assert not missing, f"oracle-backed queries with no hash-green ledger row: {missing}"
 
 
 def test_q11_spec_variant_matches_duckdb(spark, duck_small):

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from ballista_mvp_spark.operators.aggregates import exact_percentiles_ranked
@@ -107,3 +108,17 @@ def test_constant_column_single_bucket(spark):
     # result) — the all-ties frame.
     df = spark.createDataFrame([(7.5,)] * 1000, "v double").repartition(9)
     assert_bit_equal(df, "v", PS_HISTO)
+
+
+def test_empty_ps_rejected(spark):
+    df = spark.createDataFrame([(1.0,)], "v double")
+    with pytest.raises(ValueError, match="ps must be non-empty"):
+        exact_percentiles_ranked(df, "v", [])
+
+
+def test_non_numeric_column_rejected(spark):
+    # a string that does not parse as a number would cast to a NULL
+    # bucket id and silently shift every rank
+    df = spark.createDataFrame([("1.5",), ("abc",), ("3",)], "v string")
+    with pytest.raises(TypeError, match="must be numeric, got string"):
+        exact_percentiles_ranked(df, "v", [0.5])

@@ -193,3 +193,46 @@ def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
     rows_f = {(r.a, r.b): r.c for r in pre_fb.collect()}
     assert rows_i == rows_p  # exact ==: bit-equality contract
     assert rows_i == rows_f  # _na*1.0 is IEEE-identity; fallback path pinned
+
+
+def _physical_nodes(plan, fused=False):
+    """(class name, one-line node string, inside whole-stage codegen?)
+    for every operator of an executed plan, descending through AQE query
+    stages. An InputAdapter ends the enclosing fused region."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _physical_nodes(plan.executedPlan(), fused)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _physical_nodes(plan.plan(), False)
+        return
+    if name == "WholeStageCodegenExec":
+        fused = True
+    elif name == "InputAdapter":
+        fused = False
+    else:
+        yield name, plan.simpleString(100), fused
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i), fused)
+
+
+@pytest.mark.parametrize(
+    "query, marker",
+    [("sim_topk", "aggregate("), ("dedup_embedding_exact", "aggregate([], 0.0")],
+    ids=["sim_topk", "dedup_embedding_exact"],
+)
+def test_pair_scoring_stays_out_of_whole_stage_codegen(spark, query, marker):
+    """Sentinel for the WSCG ejection: the pair-scoring expression holds a
+    higher-order `aggregate` (the HOF dot in sim_topk, the _EJECT_SEED_SQL
+    seed in the unrolled cosine_from_norms chain), which is
+    CodegenFallback, so its operator runs outside whole-stage codegen.
+    A Spark that fused it would bring back the >8 KB-method JIT cliff."""
+    from ballista_mvp_spark.queries import ALL_QUERIES
+
+    df = ALL_QUERIES[query](spark, SF_DIR)
+    df.collect()
+    nodes = _physical_nodes(df._jdf.queryExecution().executedPlan())
+    scoring = [(n, fused) for n, s, fused in nodes if marker in s]
+    assert scoring, f"no operator carries {marker!r} in {query}'s plan"
+    assert not any(fused for _, fused in scoring), scoring

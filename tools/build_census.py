@@ -51,8 +51,13 @@ def main() -> None:
         print(f"{name:40s} build={out[name]:7.3f}", file=sys.stderr)
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    top = sorted(out.items(), key=lambda kv: -kv[1])[:15]
-    print(json.dumps({"total": round(sum(out.values()), 2), "top": top}))
+    ok = {k: v for k, v in out.items() if v >= 0}
+    top = sorted(ok.items(), key=lambda kv: -kv[1])[:15]
+    print(json.dumps({
+        "total": round(sum(ok.values()), 2),
+        "errors": len(out) - len(ok),
+        "top": top,
+    }))
 
 
 if __name__ == "__main__":
