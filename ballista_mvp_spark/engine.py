@@ -934,26 +934,39 @@ class Engine:
     def run_job_with_metrics(self, df: DataFrame, description: str = ""):
         """Like :meth:`run_job`, but also returns rolled-up runtime
         metrics (rows, scan/shuffle bytes, exchange counts, stage/task
-        counts) — the analogue of the reference's per-job metrics REST
-        surface (api/handlers.rs:184-243). Returns
+        counts, codegen compiles) — the analogue of the reference's
+        per-job metrics REST surface (api/handlers.rs:184-243). Returns
         ``(job_id, rows, QueryMetrics)``.
 
         SQLMetrics read as PER-LATEST-RUN values: Spark 4 resets the
         plan's metric accumulators at each execution (verified
         empirically — three collects of the same DataFrame each read the
         single-run scan_rows, not a cumulative sum), so the roll-up
-        below is this job's work without any snapshot arithmetic."""
+        below is this job's work without any snapshot arithmetic.
+
+        ``codegen_classes`` / ``codegen_ms`` are the deltas of
+        ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count and
+        ``CodeGenerator.compileTime()`` across the job: classes compiled
+        because they missed the generated-class cache. Both counters are
+        JVM-wide, so a concurrent query's compiles land in this delta."""
         import time
 
         from .plans.metrics import collect_plan_metrics
 
         sc = self.spark.sparkContext
+        jvm = self.spark._jvm
+        compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
         t0 = time.monotonic()
         job_id, rows = self.run_job(df, description)
         wall = time.monotonic() - t0
+        n1, ns1 = compiles.getCount(), codegen.compileTime()
         qm = collect_plan_metrics(df)
         qm.output_rows = len(rows)
         qm.wall_time_sec = round(wall, 3)
+        qm.codegen_classes = n1 - n0
+        qm.codegen_ms = round((ns1 - ns0) / 1e6, 3)
         tracker = sc.statusTracker()
         spark_jobs = tracker.getJobIdsForGroup(job_id)
         qm.num_jobs = len(spark_jobs)

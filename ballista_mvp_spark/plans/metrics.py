@@ -70,6 +70,8 @@ class QueryMetrics:
     num_stages: int = 0
     num_tasks: int = 0
     wall_time_sec: float = 0.0
+    codegen_classes: int = 0
+    codegen_ms: float = 0.0
     per_node: list[tuple[str, dict[str, int]]] = field(default_factory=list)
 
     def as_dict(self) -> dict:

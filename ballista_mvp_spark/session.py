@@ -59,24 +59,11 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Broadcast policy (round 9, measured in tools/decon_scale.py +
-        # tools/plan_audit.py audit D): the STATIC threshold is OFF and
-        # only AQE's RUNTIME threshold promotes joins to broadcast.
-        # Catalyst's pre-execution size estimates are structurally
-        # disconnected from true cardinality on explode-derived frames
-        # (the wide text column divides the row estimate while the
-        # explode fans out 10-100x): 28 of 320 registry plans would
-        # static-broadcast a corpus-derived shingle/band/vocab frame
-        # under an estimate threshold, AQE can never demote a
-        # statically-planned broadcast (no shuffle stage to re-measure),
-        # and the measured end state is 'Not enough memory to build and
-        # broadcast' at ~67M derived rows — not a graceful flip. With
-        # static off, every un-hinted join plans as a shuffle join and
-        # AQE converts to broadcast from the MATERIALIZED stage size
-        # (localShuffleReader keeps the probe side cheap), which is the
-        # only size signal that stays truthful at 100 TB. Explicit
-        # F.broadcast() contract pins (dimensions, bounded probe/eval
-        # sides) bypass both thresholds, unchanged.
+        # Holds the registry working set: ~4,000 classes a pass, ~41 KiB metaspace each.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # Broadcast is a runtime decision: static threshold off, AQE promotes
+        # joins from materialized stage sizes; F.broadcast() pins bypass both
+        # (why: SCALE.md "Broadcast policy").
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
@@ -88,14 +75,8 @@ def build_session(
         # event-time watermarks accept it (values identical under UTC).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # -XX:-DontCompileHugeMethods was evaluated for the unrolled
-        # fixed-dim vector arithmetic (operators/similarity.dot) and
-        # REJECTED by interleaved A/B (OPTIMIZATION_r11.md): it JIT-compiled
-        # the >8 KB generated methods (isolated dot microbench 18.6→9.5 s)
-        # but the C2 compile storms it triggers on the big codegen'd plans
-        # made real queries erratically slower (dedup_embedding_exact cold
-        # 30→41-107 s, sim_hybrid_rrf warm 1.8→6.9-11.1 s). The unrolled
-        # expressions are fast enough bytecode-interpreted.
+        # -XX:-DontCompileHugeMethods stays unset: it triggers C2 compile
+        # storms on big generated plans (rejected, OPTIMIZATION_r11.md).
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
     )

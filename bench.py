@@ -80,12 +80,12 @@ def main() -> None:
     # Two passes per query. Pass 1 (cold) includes Catalyst planning +
     # whole-stage-codegen compilation of each distinct plan — the headline
     # `value`, methodology-identical across rounds. Pass 2 (warm) reruns
-    # the suite in the same session, so first-use JVM class loading and
-    # JIT warmup are gone, but it is NOT codegen-free: the cold pass
-    # compiles several hundred generated classes, more than Spark's
-    # generated-class cache holds (spark.sql.codegen.cache.maxEntries,
-    # default 100), so the warm pass recompiles most plans. Pass 2 thus
-    # measures per-query planning + codegen + execution on a warm JVM.
+    # the suite in the same session: first-use JVM class loading and JIT
+    # warmup are gone, and its generated classes hit Spark's class cache
+    # (build_session sizes spark.sql.codegen.cache.maxEntries to the
+    # registry's working set). Pass 2 thus measures per-query planning +
+    # execution on a warm JVM; only code whose literals change between
+    # runs recompiles.
     times: dict[str, float] = {}
     warm: dict[str, float] = {}
     for name in BENCH_QUERIES:

@@ -649,3 +649,46 @@ def test_dialect_rewrites_cross_engine_fuzz(spark):
         if got != want:
             mismatches.append((q, got, want))
     assert not mismatches, mismatches[0]
+
+
+# An aggregate whose bound literals are inlined into the generated code, so
+# every distinct (w, lo) compiles its own classes. One shuffle: a join of two
+# small scans would let AQE pick either build side, and each side is new code.
+_FILTER_AGG = (
+    "SELECT c_nationkey, count(*) AS n, sum(c_acctbal * :w) AS s "
+    "FROM customer WHERE c_acctbal > :lo GROUP BY c_nationkey"
+)
+
+
+def test_repeated_prepared_statement_skips_codegen(spark):
+    """A long-lived session re-executes a prepared statement without
+    recompiling, even after more distinct statements than Spark's default
+    generated-class cache (100 entries) holds have run since."""
+    eng = Engine(spark=spark, seed=17)
+    eng.register_testdata(SF_SMALL)
+    ps = eng.prepare(_FILTER_AGG)
+
+    def run(args):
+        _, rows, qm = eng.run_job_with_metrics(eng.execute_prepared(ps.handle, args=args))
+        return sorted(rows), qm.codegen_classes
+
+    first, _ = run({"w": 1.0117, "lo": -1})
+    filler = sum(run({"w": 2.0 + i / 1024, "lo": i})[1] for i in range(64))
+    assert filler > 100, f"filler compiled only {filler} classes"
+    again, compiled = run({"w": 1.0117, "lo": -1})
+    assert compiled == 0
+    assert again == first
+
+
+def test_run_job_with_metrics_reports_codegen(spark):
+    """The first run of a fresh statement compiles its generated classes;
+    an identical rerun is served from the class cache."""
+    eng = Engine(spark=spark, seed=18)
+    eng.register_testdata(SF_SMALL)
+    q = "SELECT n_regionkey, sum(n_nationkey * 7.0313) AS s FROM nation GROUP BY n_regionkey"
+    _, rows1, m1 = eng.run_job_with_metrics(eng.sql(q))
+    _, rows2, m2 = eng.run_job_with_metrics(eng.sql(q))
+    assert m1.codegen_classes > 0 and m1.codegen_ms > 0
+    assert m2.codegen_classes == 0 and m2.codegen_ms == 0
+    assert sorted(rows1) == sorted(rows2)
+    assert m1.as_dict()["codegen_classes"] == m1.codegen_classes

@@ -693,3 +693,18 @@ def test_shipped_broadcast_policy(spark):
         spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") == "64m"
     )
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_langid_confusion_scores_corpus_once(spark):
+    """text_langid_confusion derives its per-language totals from the
+    confusion matrix: the totals branch must read the matrix's shuffle
+    through a ReusedExchange, so the documents are scanned and scored
+    once. A second scoring pass shows up as a second documents scan."""
+    from ballista_mvp_spark.plans.metrics import collect_plan_metrics
+    from ballista_mvp_spark.queries.extensions import text_langid_confusion
+
+    df = text_langid_confusion(spark, SF_SMALL)
+    df.collect()
+    nodes = [cls for cls, _ in collect_plan_metrics(df).per_node]
+    assert "ReusedExchangeExec" in nodes, nodes
+    assert nodes.count("FileSourceScanExec") == 1, nodes
