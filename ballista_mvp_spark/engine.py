@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .session import build_session
 from .tables import register_all
+from .types import local_frame
 
 _FORMAT_ALIASES = {
     "parquet": "parquet",
@@ -738,12 +739,13 @@ class Engine:
             v = _V.write_versioned(aligned, path, mode=mode)
             self.register_versioned(m.group(2), path)
             mm = _V._read_manifest(path, v)
-            return self.spark.createDataFrame(
-                [(v, mm["n_added"])], "version int, files_added int"
+            return local_frame(
+                self.spark, [(v, mm["n_added"])], "version int, files_added int"
             )
         if (m := _VSQL_HISTORY.match(q)) and (path := _path(m.group(1))):
             hist = _V.history(path)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(h["version"], h["op"], h["n_files"], h["n_added"]) for h in hist],
                 "version int, op string, n_files int, n_added int",
             )
@@ -758,7 +760,8 @@ class Engine:
             )
             self.register_versioned(m.group(1), path)
             mm = _V._read_manifest(path, v)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(v, mm.get("n_rewritten", 0))],
                 "version int, files_rewritten int",
             )
@@ -766,7 +769,8 @@ class Engine:
             v = _V.delete_versioned(self.spark, path, m.group(2))
             self.register_versioned(m.group(1), path)
             mm = _V._read_manifest(path, v)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(v, mm.get("n_rewritten", 0))],
                 "version int, files_rewritten int",
             )
@@ -776,15 +780,16 @@ class Engine:
             v = _V.merge_versioned(self.spark, path, source, key=key)
             self.register_versioned(m.group(1), path)
             mm = _V._read_manifest(path, v)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(v, mm.get("n_rewritten", 0))],
                 "version int, files_rewritten int",
             )
         if (m := _VSQL_RESTORE.match(q)) and (path := _path(m.group(1))):
             v = _V.restore_versioned(path, int(m.group(2)))
             self.register_versioned(m.group(1), path)
-            return self.spark.createDataFrame(
-                [(v, int(m.group(2)))], "version int, restored_from int"
+            return local_frame(
+                self.spark, [(v, int(m.group(2)))], "version int, restored_from int"
             )
         if (m := _VSQL_VACUUM.match(q)) and (path := _path(m.group(1))):
             keep = int(m.group(2)) if m.group(2) else 1
@@ -815,9 +820,7 @@ class Engine:
                     keep = max(keep, versions[-1] - min(young) + 1)
                 keep = max(keep, 1)
             removed = _V.vacuum(path, keep_last=keep, **kwargs)
-            return self.spark.createDataFrame(
-                [(removed,)], "files_removed int"
-            )
+            return local_frame(self.spark, [(removed,)], "files_removed int")
         if (m := _VSQL_OPTIMIZE.match(q)) and (path := _path(m.group(1))):
             # Delta's OPTIMIZE: small-file compaction as a commit; time
             # travel to pre-compaction versions is untouched.
@@ -825,7 +828,8 @@ class Engine:
             v = _V.compact_versioned(self.spark, path, target_file_mb=target)
             self.register_versioned(m.group(1), path)
             mm = _V._read_manifest(path, v)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(v, mm["n_files"], mm["n_added"])],
                 "version int, n_files int, n_added int",
             )

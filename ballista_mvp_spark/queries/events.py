@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load_table
+from ..types import local_frame
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -1768,15 +1769,16 @@ def streaming_cdc_upsert(spark, sf_dir):
             .start()
         )
         q.awaitTermination(300)
-        rows = [
+        rows = sorted(
             (r.user_id, r.event_type, float(r.value))
             for r in V.read_versioned(spark, tbl).collect()
-        ]
+        )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "user_id bigint, last_type string, last_value double"
-    ).orderBy("user_id")
+    # sorted on the driver (user_id is the table's unique, non-NULL key)
+    return local_frame(
+        spark, rows, "user_id bigint, last_type string, last_value double"
+    )
 
 
 STREAMING_CDC_UPSERT_ORACLE = """

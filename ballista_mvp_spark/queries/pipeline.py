@@ -18,6 +18,7 @@ from ..operators import dedup as D
 from ..operators import pipeline as P
 from ..operators import text as TX
 from ..tables import load_table
+from ..types import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1752,9 +1753,10 @@ def versioned_time_travel(spark, sf_dir):
             rows.append((v, n, float(s), c))
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, n_orders bigint, sum_price double, n_cust bigint"
-    ).orderBy("version")
+    # rows are built in version order: the ORDER BY needs no sort job
+    return local_frame(
+        spark, rows, "version int, n_orders bigint, sum_price double, n_cust bigint"
+    )
 
 
 VERSIONED_TIME_TRAVEL_ORACLE = """
@@ -1938,9 +1940,10 @@ def versioned_update_restore(spark, sf_dir):
             rows.append((v, n, float(s), u))
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, n_orders bigint, sum_price double, n_updated bigint"
-    ).orderBy("version")
+    # rows are built in version order: the ORDER BY needs no sort job
+    return local_frame(
+        spark, rows, "version int, n_orders bigint, sum_price double, n_updated bigint"
+    )
 
 
 VERSIONED_UPDATE_RESTORE_ORACLE = """
@@ -2025,9 +2028,8 @@ def versioned_cdf(spark, sf_dir):
         rows = [(r.version, r.net_rows, float(r.net_price)) for r in out]
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "version int, net_rows bigint, net_price double"
-    ).orderBy("version")
+    # rows were collected in version order
+    return local_frame(spark, rows, "version int, net_rows bigint, net_price double")
 
 
 VERSIONED_CDF_ORACLE = """

@@ -15,7 +15,11 @@ Layout under the table root:
     data/commit-{version}-{token}/part-*.parquet   immutable data files
     _manifests/v{version:08d}.json                 one manifest per commit
 
-A manifest lists every data file LIVE at that version (relative paths).
+A manifest lists every data file LIVE at that version (relative paths),
+per-file footer stats (``stats``), and the Spark schema of each data
+directory whose live files all carry the same one (``schemas``:
+``{"data/commit-3-<token>": "<schema json>"}``, read from the footers
+at commit time — one entry per write, not per file).
 The commit protocol is write-data-then-link-manifest:
 
 1. data files are written to a fresh commit directory (no reader ever
@@ -32,8 +36,10 @@ The commit protocol is write-data-then-link-manifest:
 Scale shape: all bookkeeping is O(files) metadata — the manifest for a
 100 TB / 1 GB-file table is ~100k paths (a few MB of JSON; swap for a
 parquet manifest at larger file counts, same protocol). Reads hand Spark
-the explicit file list, so planning never pays a recursive directory
-listing over dead files; time travel and vacuum never touch data bytes.
+the explicit file list AND the recorded schema, so planning never pays a
+recursive directory listing over dead files and never opens a footer
+(no schema-inference job); time travel and vacuum never touch data
+bytes.
 """
 
 from __future__ import annotations
@@ -43,9 +49,13 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
+# footer key-value entry holding the writer's Spark schema (JSON) — the
+# string Spark's own parquet schema inference reads
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -137,16 +147,21 @@ def _data_files(commit_dir: str) -> list[str]:
     )
 
 
-def _file_stats(commit_dir: str, files: list[str], cols: list[str]) -> dict:
+def _file_stats(
+    commit_dir: str, files: list[str], cols: list[str]
+) -> tuple[dict, str | None]:
     """Per-file min/max for ``cols`` straight from the parquet footers —
     written ONCE at commit time so reads can skip files from the
-    manifest alone (Delta data-skipping stats). O(files) footer reads,
-    zero data pages."""
+    manifest alone (Delta data-skipping stats) — and the Spark schema
+    the footers record, or None unless every file records the same one.
+    O(files) footer reads, zero data pages."""
     import pyarrow.parquet as pq
 
     out = {}
+    schemas = set()
     for f in files:
         md = pq.ParquetFile(os.path.join(commit_dir, f)).metadata
+        schemas.add((md.metadata or {}).get(_SPARK_SCHEMA_KEY))
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         st = {"#rows": md.num_rows}
         for c in cols:
@@ -163,7 +178,37 @@ def _file_stats(commit_dir: str, files: list[str], cols: list[str]) -> dict:
             if los:
                 st[c] = [min(los), max(his)]
         out[f] = st
-    return out
+    schema = schemas.pop() if len(schemas) == 1 else None
+    return out, schema.decode() if schema else None
+
+
+def _manifest(
+    version: int,
+    op: str,
+    live: list[str],
+    n_added: int,
+    stats: dict,
+    schemas: dict,
+    batch_id: int | None = None,
+    **extra,
+) -> dict:
+    """One commit's manifest record, shared by every commit kind; empty
+    ``stats`` / ``schemas`` and a missing ``batch_id`` are left out."""
+    m = {
+        "version": version,
+        "op": op,
+        "files": live,
+        "n_files": len(live),
+        "n_added": n_added,
+        **extra,
+    }
+    if stats:
+        m["stats"] = stats
+    if schemas:
+        m["schemas"] = schemas
+    if batch_id is not None:
+        m["batch_id"] = batch_id
+    return m
 
 
 def write_versioned(
@@ -205,24 +250,19 @@ def write_versioned(
     added = _data_files(commit_dir)
     new_files = [os.path.join(commit_rel, f) for f in added]
     live = list(new_files)
-    stats = {}
+    stats, schemas = {}, {}
     if mode == "append" and prev:
         pm = _read_manifest(path, prev[-1])
         live = pm["files"] + new_files
         stats = dict(pm.get("stats", {}))
-    fs = _file_stats(commit_dir, added, stats_cols or [])
+        schemas = dict(pm.get("schemas", {}))
+    fs, schema = _file_stats(commit_dir, added, stats_cols or [])
     stats.update({os.path.join(commit_rel, f): st for f, st in fs.items()})
-    manifest = {
-        "version": version,
-        "op": mode,
-        "files": live,
-        "n_files": len(live),
-        "n_added": len(new_files),
-    }
-    if stats:
-        manifest["stats"] = stats
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
+    if schema is not None:
+        schemas[commit_rel] = schema
+    manifest = _manifest(
+        version, mode, live, len(new_files), stats, schemas, batch_id
+    )
     _link_manifest(path, version, manifest, token)
     return version
 
@@ -282,8 +322,10 @@ def commit_files(
     ONLY files named here enter the live set — stray outputs of failed
     or speculative tasks stay invisible orphans until vacuum, exactly
     the write-data-then-link contract of ``write_versioned``. Same
-    atomic create-exclusive manifest link; same stats/row-count
-    recording (footer reads on the added files only)."""
+    atomic create-exclusive manifest link; same stats/row-count/schema
+    recording (footer reads on the added files only). A directory that
+    already holds live files gets no recorded schema: its earlier files
+    were not read here."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     missing = [f for f in added_files if not os.path.exists(os.path.join(path, f))]
@@ -293,30 +335,32 @@ def commit_files(
     prev = _versions(path)
     version = (prev[-1] + 1) if prev else 1
     new_files = sorted(added_files)
-    live = list(new_files)
-    stats = {}
+    carried: list[str] = []
+    stats, schemas = {}, {}
     if mode == "append" and prev:
         pm = _read_manifest(path, prev[-1])
-        live = pm["files"] + new_files
+        carried = pm["files"]
         stats = dict(pm.get("stats", {}))
+        schemas = dict(pm.get("schemas", {}))
+    by_dir: dict[str, list[str]] = {}
     for f in new_files:
-        fs = _file_stats(
-            os.path.join(path, os.path.dirname(f)),
-            [os.path.basename(f)],
+        by_dir.setdefault(os.path.dirname(f), []).append(f)
+    for d, fs_in_dir in by_dir.items():
+        fs, schema = _file_stats(
+            os.path.join(path, d),
+            [os.path.basename(f) for f in fs_in_dir],
             stats_cols or [],
         )
-        stats[f] = fs[os.path.basename(f)]
-    manifest = {
-        "version": version,
-        "op": mode,
-        "files": live,
-        "n_files": len(live),
-        "n_added": len(new_files),
-    }
-    if stats:
-        manifest["stats"] = stats
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
+        for f in fs_in_dir:
+            stats[f] = fs[os.path.basename(f)]
+        if schema is None or any(os.path.dirname(f) == d for f in carried):
+            schemas.pop(d, None)
+        else:
+            schemas[d] = schema
+    live = carried + new_files
+    manifest = _manifest(
+        version, mode, live, len(new_files), stats, schemas, batch_id
+    )
     _link_manifest(path, version, manifest, uuid.uuid4().hex[:12])
     return version
 
@@ -410,6 +454,31 @@ def mutate_with_retry(fn, retries: int = 3):
                 raise
 
 
+def _scan(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    rel_files: list[str],
+    merge_schema: bool = False,
+) -> DataFrame:
+    """The module's one parquet reader: ``rel_files`` (live files of
+    manifest ``m``) read with the schema ``m`` recorded for their
+    directories, so planning opens no footer and runs no Spark job.
+    When a directory has no recorded schema (a manifest written before
+    schemas were recorded, an external writer's files) or the recorded
+    schemas differ (a schema-evolved live set), Spark infers the schema
+    from the footers as usual, unioned when ``merge_schema``."""
+    schemas = m.get("schemas", {})
+    recorded = {schemas.get(os.path.dirname(f)) for f in rel_files}
+    if len(recorded) == 1 and None not in recorded:
+        reader = spark.read.schema(StructType.fromJson(json.loads(recorded.pop())))
+    elif merge_schema:
+        reader = spark.read.option("mergeSchema", "true")
+    else:
+        reader = spark.read
+    return reader.parquet(*[os.path.join(path, f) for f in rel_files])
+
+
 def read_versioned(
     spark: SparkSession,
     path: str,
@@ -450,22 +519,19 @@ def read_versioned(
             if (st := stats.get(f, {}).get(col)) is None
             or _overlaps(st, lo, hi)
         ]
-    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     if not m["files"]:
         # a legitimately EMPTY version (truncating overwrite, empty
         # first stream batch): 0 rows with the schema of the nearest
         # earlier version that has files — an empty table is data, not
         # an error
         for pv in reversed([x for x in vs if x <= v]):
-            pf = _read_manifest(path, pv)["files"]
-            if pf:
-                # ALL files of the schema-carrying version, not just
-                # pf[0]: on a schema-evolved table mergeSchema must see
+            pm = _read_manifest(path, pv)
+            if pm["files"]:
+                # ALL files of the schema-carrying version, not just the
+                # first: on a schema-evolved table mergeSchema must see
                 # the union of the evolved column set — limit(0) keeps
-                # this a footer-only read
-                return reader.parquet(
-                    *[os.path.join(path, f) for f in pf]
-                ).limit(0)
+                # this a metadata-only read
+                return _scan(spark, path, pm, pm["files"], merge_schema).limit(0)
         raise FileNotFoundError(
             f"version {v} at {path} is empty and no earlier version "
             "carries a schema"
@@ -473,10 +539,8 @@ def read_versioned(
     if not rel_files:
         # every file pruned: empty result with the table's FULL schema
         # (all files — a single file may predate a schema evolution)
-        return reader.parquet(
-            *[os.path.join(path, f) for f in m["files"]]
-        ).limit(0)
-    return reader.parquet(*[os.path.join(path, f) for f in rel_files])
+        return _scan(spark, path, m, m["files"], merge_schema).limit(0)
+    return _scan(spark, path, m, rel_files, merge_schema)
 
 
 def history(path: str) -> list[dict]:
@@ -558,7 +622,7 @@ def _commit_rewrite(
     out_df: DataFrame,
     untouched: list[str],
     op: str,
-    prev_stats: dict,
+    head_m: dict,
     stats_cols: list[str] | None,
     n_rewritten: int,
     batch_id: int | None = None,
@@ -566,8 +630,9 @@ def _commit_rewrite(
 ) -> int:
     """Commit a row-level mutation: write ``out_df`` (the rewritten
     content of the touched files) as new data files, carry every
-    untouched file over BY REFERENCE (with its recorded stats), and
-    link the manifest atomically.
+    untouched file over BY REFERENCE (with the stats and directory
+    schema ``head_m`` recorded for it), and link the manifest
+    atomically.
 
     ``head_v`` is the version the caller PLANNED against; the commit is
     pinned to ``head_v + 1`` so a commit that landed while the rewrite
@@ -586,21 +651,20 @@ def _commit_rewrite(
     added = _data_files(commit_dir)
     new_files = [os.path.join(commit_rel, f) for f in added]
     live = untouched + new_files
+    prev_stats = head_m.get("stats", {})
     stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-    fs = _file_stats(commit_dir, added, stats_cols or [])
+    fs, schema = _file_stats(commit_dir, added, stats_cols or [])
     stats.update({os.path.join(commit_rel, f): st for f, st in fs.items()})
-    manifest = {
-        "version": version,
-        "op": op,
-        "files": live,
-        "n_files": len(live),
-        "n_added": len(new_files),
-        "n_rewritten": n_rewritten,
+    kept_dirs = {os.path.dirname(f) for f in untouched}
+    schemas = {
+        d: sch for d, sch in head_m.get("schemas", {}).items() if d in kept_dirs
     }
-    if stats:
-        manifest["stats"] = stats
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
+    if schema is not None:
+        schemas[commit_rel] = schema
+    manifest = _manifest(
+        version, op, live, len(new_files), stats, schemas, batch_id,
+        n_rewritten=n_rewritten,
+    )
     _link_manifest(path, version, manifest, token)
     return version
 
@@ -648,19 +712,17 @@ def delete_versioned(
     # and the rewrite must keep the UNION schema — a single-file-
     # inferred schema would silently drop evolved columns from the
     # rewritten files (permanent loss at the new head).
-    scan = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in cand]
-    )
+    scan = _scan(spark, path, m, cand, merge_schema=True)
     marker = scan.filter(pred).select(F.input_file_name().alias("_f"))
     touched = _touched_files(path, cand, marker)
     if not touched:
         return head_v
-    survivors = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in touched]
-    ).filter(~F.coalesce(pred, F.lit(False)))
+    survivors = _scan(spark, path, m, touched, merge_schema=True).filter(
+        ~F.coalesce(pred, F.lit(False))
+    )
     untouched = [f for f in files if f not in set(touched)]
     return _commit_rewrite(
-        path, survivors, untouched, "delete", stats, stats_cols, len(touched),
+        path, survivors, untouched, "delete", m, stats_cols, len(touched),
         head_v=head_v,
     )
 
@@ -725,9 +787,7 @@ def update_versioned(
     pred = F.expr(predicate)
     # mergeSchema on both phases — same rationale as delete_versioned:
     # never let a single-file-inferred schema drop evolved columns.
-    scan = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in cand]
-    )
+    scan = _scan(spark, path, m, cand, merge_schema=True)
     unknown = set(set_exprs) - set(scan.columns)
     if unknown:
         raise ValueError(f"UPDATE SET names unknown columns: {sorted(unknown)}")
@@ -735,9 +795,7 @@ def update_versioned(
     touched = _touched_files(path, cand, marker)
     if not touched:
         return head_v
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in touched]
-    )
+    df = _scan(spark, path, m, touched, merge_schema=True)
     cond = F.coalesce(pred, F.lit(False))
     cols = [
         F.when(cond, F.expr(set_exprs[fld.name]).cast(fld.dataType))
@@ -749,7 +807,7 @@ def update_versioned(
     ]
     untouched = [f for f in files if f not in set(touched)]
     return _commit_rewrite(
-        path, df.select(cols), untouched, "update", stats, stats_cols,
+        path, df.select(cols), untouched, "update", m, stats_cols,
         len(touched), head_v=head_v,
     )
 
@@ -813,6 +871,8 @@ def merge_versioned(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct(key).alias("nd"),
         F.count(F.when(F.col(key).isNull(), 1)).alias("nnull"),
+        F.min(key).alias("lo"),
+        F.max(key).alias("hi"),
     ).first()
     if chk["n"] == 0:
         return head_v
@@ -823,7 +883,7 @@ def merge_versioned(
             f"merge source keys not unique on {key}: "
             f"{chk['n']} rows, {chk['nd']} distinct"
         )
-    lo, hi = source.agg(F.min(key), F.max(key)).first()
+    lo, hi = chk["lo"], chk["hi"]
     cand = [
         f
         for f in files
@@ -833,8 +893,7 @@ def merge_versioned(
     touched: list[str] = []
     if cand:
         marker = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(path, f) for f in cand])
+            _scan(spark, path, m, cand, merge_schema=True)
             .select(key)
             .withColumn("_f", F.input_file_name())
             .join(keys_df, key, "left_semi")
@@ -842,10 +901,8 @@ def merge_versioned(
         )
         touched = _touched_files(path, cand, marker)
     if touched:
-        survivors = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(path, f) for f in touched])
-            .join(keys_df, key, "left_anti")
+        survivors = _scan(spark, path, m, touched, merge_schema=True).join(
+            keys_df, key, "left_anti"
         )
         # touched files may PREDATE later-added columns (their union
         # schema is narrower than the live set's): allowMissingColumns
@@ -856,7 +913,7 @@ def merge_versioned(
         out = source  # no key overlap anywhere: pure insert
     untouched = [f for f in files if f not in set(touched)]
     return _commit_rewrite(
-        path, out, untouched, "merge", stats, stats_cols, len(touched),
+        path, out, untouched, "merge", m, stats_cols, len(touched),
         batch_id=batch_id, head_v=head_v,
     )
 
@@ -865,7 +922,8 @@ def restore_versioned(path: str, version: int) -> int:
     """RESTORE TABLE TO VERSION AS OF — commits ``version``'s exact file
     list (and its stats) as the NEW head. Metadata-only: zero data bytes
     written or copied, whatever the table size (Delta RESTORE
-    semantics). The restored files must still exist (not vacuumed).
+    semantics); the recorded schemas come along with the file list. The
+    restored files must still exist (not vacuumed).
     History is preserved — the rollback is itself a commit, so both the
     mistake and the recovery stay in the log, and the change feed sees
     the restore as deletes of the abandoned files plus inserts of the
@@ -884,16 +942,10 @@ def restore_versioned(path: str, version: int) -> int:
             f"restore to v{version} needs vacuumed file(s): {missing[:3]}"
         )
     new_v = vs[-1] + 1
-    manifest = {
-        "version": new_v,
-        "op": "restore",
-        "files": m_old["files"],
-        "n_files": len(m_old["files"]),
-        "n_added": 0,
-        "restored_from": version,
-    }
-    if m_old.get("stats"):
-        manifest["stats"] = m_old["stats"]
+    manifest = _manifest(
+        new_v, "restore", m_old["files"], 0, m_old.get("stats"),
+        m_old.get("schemas"), restored_from=version,
+    )
     _link_manifest(path, new_v, manifest, uuid.uuid4().hex[:12])
     return new_v
 
@@ -1068,23 +1120,21 @@ def read_changes(
             raise FileNotFoundError(f"version {v} not in {vs} at {path}")
     if to_v < from_version:
         raise ValueError(f"to_version {to_v} < from_version {from_version}")
-    prev_files = (
-        set(_read_manifest(path, from_version)["files"])
-        if from_version
-        else set()
-    )
+    prev_m = _read_manifest(path, from_version) if from_version else {"files": []}
     parts: list[DataFrame] = []
     for v in vs:
         if not (from_version < v <= to_v):
             continue
-        cur_files = set(_read_manifest(path, v)["files"])
-        for rel_set, kind in (
-            (cur_files - prev_files, "insert"),
-            (prev_files - cur_files, "delete"),
+        cur_m = _read_manifest(path, v)
+        prev_files, cur_files = set(prev_m["files"]), set(cur_m["files"])
+        for rel_set, kind, owner in (
+            (cur_files - prev_files, "insert", cur_m),
+            (prev_files - cur_files, "delete", prev_m),
         ):
             if not rel_set:
                 continue
-            paths = [os.path.join(path, f) for f in sorted(rel_set)]
+            rel = sorted(rel_set)
+            paths = [os.path.join(path, f) for f in rel]
             missing = [p for p in paths if not os.path.exists(p)]
             if missing:
                 raise FileNotFoundError(
@@ -1092,11 +1142,11 @@ def read_changes(
                     " — raise vacuum keep_last or lower from_version"
                 )
             parts.append(
-                spark.read.parquet(*paths)
+                _scan(spark, path, owner, rel)
                 .withColumn("_change_type", F.lit(kind))
                 .withColumn("_commit_version", F.lit(v).cast("int"))
             )
-        prev_files = cur_files
+        prev_m = cur_m
     if not parts:
         base = read_versioned(spark, path, version=to_v if to_v else None)
         return (

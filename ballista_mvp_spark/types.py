@@ -14,6 +14,7 @@ including the cases with no Spark equivalent:
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _SIMPLE = {
@@ -93,3 +94,20 @@ def schema_from_fields(fields: list[tuple[str, str, bool]]) -> T.StructType:
     return T.StructType(
         [T.StructField(n, arrow_to_spark(t), nullable) for n, t, nullable in fields]
     )
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-built ``rows`` (DDL ``schema``) as a DataFrame over a
+    ``LocalRelation``, in ``rows`` order. The rows go through a
+    ``pyarrow.Table``, which Spark keeps local below
+    ``spark.sql.execution.arrow.localRelationThreshold`` whatever the
+    session's Arrow conf; ``createDataFrame`` over a Python list is a
+    PythonRDD whose every job ships the rows through Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(T.DataType.fromDDL(schema))
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table)

@@ -11,6 +11,8 @@ import pytest
 
 from ballista_mvp_spark.sources import versioned as V
 
+from .conftest import SF_SMALL
+
 
 def _ids(df):
     return sorted(r.id for r in df.collect())
@@ -1236,3 +1238,148 @@ def test_interloper_append_between_plan_and_link_never_lost(spark, tmp_path, mon
     assert ids == [2, 3, 4, 5, 6, 7, 8, 9, 100]  # interloper row SURVIVED
     # history: v1 seed, v2 interloper, v3+ the (re-planned) delete
     assert V._versions(t)[0:2] == [1, 2] and len(V._versions(t)) >= 3
+
+
+# One column per type the engine writes; `i64` is the row key.
+_TYPE_MATRIX_SQL = """
+SELECT CAST(id AS TINYINT) AS i8, CAST(id AS SMALLINT) AS i16,
+       CAST(id AS INT) AS i32, id AS i64,
+       CAST(id / 4 AS FLOAT) AS f32, id / 3 AS f64,
+       CAST(id * 1.25 AS DECIMAL(12,2)) AS d12,
+       CAST(id / 7 AS DECIMAL(38,10)) AS d38,
+       date_add(DATE'2024-02-28', CAST(id AS INT)) AS dt,
+       TIMESTAMP'2024-01-01 00:00:00' + make_dt_interval(0, CAST(id AS INT)) AS ts,
+       TIMESTAMP_NTZ'2024-01-01 00:00:00' + make_dt_interval(CAST(id AS INT)) AS ts_ntz,
+       CAST(id AS STRING) AS s,
+       CAST(CAST(id AS STRING) AS BINARY) AS bin,
+       id % 2 = 0 AS flag,
+       array(id, NULL) AS arr,
+       map('k', id) AS m,
+       named_struct('a', array(named_struct('x', id, 'y', CAST(id AS STRING)))) AS nested,
+       CAST(NULL AS DOUBLE) AS all_null
+FROM range(6)
+"""
+
+
+def _type_matrix(spark, staged: str):
+    """The matrix plus char/varchar columns (a string column carrying
+    Spark's char/varchar metadata, as a catalog table's DataFrame does),
+    staged through parquet so every column is nullable, like any column
+    read from a table."""
+    from pyspark.sql import functions as F
+
+    meta = "__CHAR_VARCHAR_TYPE_STRING"
+    spark.sql(_TYPE_MATRIX_SQL).select(
+        "*",
+        F.col("s").alias("ch", metadata={meta: "char(4)"}),
+        F.col("s").alias("vc", metadata={meta: "varchar(8)"}),
+    ).write.parquet(staged)
+    return spark.read.parquet(staged)
+
+
+def _by_key(df):
+    return sorted(df.collect(), key=lambda r: r.i64)
+
+
+def test_recorded_schema_matches_inference(spark, tmp_path):
+    """Each commit records its directory's Spark schema from the footers;
+    reads planned from it give exactly the schema (metadata included)
+    and rows Spark's own footer inference gives, with merge_schema on
+    and off."""
+    t = str(tmp_path / "t")
+    src = _type_matrix(spark, str(tmp_path / "staged"))
+    V.write_versioned(src.repartition(2), t)
+    V.write_versioned(src.limit(0), t)  # an empty write: a file, no rows
+    m = V._read_manifest(t, 2)
+    assert len(m["schemas"]) == 2  # one entry per write, not per file
+    files = [os.path.join(t, f) for f in m["files"]]
+    for merge in (False, True):
+        got = V.read_versioned(spark, t, merge_schema=merge)
+        want = spark.read.option("mergeSchema", str(merge).lower()).parquet(*files)
+        assert got.schema.json() == want.schema.json()
+        assert _by_key(got) == _by_key(want)
+        assert len(_by_key(got)) == 6
+
+
+def test_versioned_reads_plan_without_spark_jobs(spark, tmp_path):
+    """With schemas recorded at commit, building a read of any version
+    after UPDATE, OPTIMIZE and RESTORE, and building the change feed,
+    opens no footer: Spark's job counter does not move."""
+    t = str(tmp_path / "t")
+    src = _type_matrix(spark, str(tmp_path / "staged"))
+    V.write_versioned(src.repartition(3), t)  # v1
+    V.update_versioned(spark, t, {"s": "concat(s, '!')"}, "i64 = 2")  # v2
+    V.compact_versioned(spark, t)  # v3
+    V.restore_versioned(t, 1)  # v4
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    frames = [V.read_versioned(spark, t, version=v) for v in (1, 2, 3, 4)]
+    feed = V.read_changes(spark, t, from_version=0)
+    assert dag.nextJobId() == before
+    assert [f.count() for f in frames] == [6, 6, 6, 6]
+    assert sorted(r.s for r in frames[2].collect()) == ["0", "1", "2!", "3", "4", "5"]
+    assert feed.filter("_change_type = 'insert'").count() > 0
+
+
+def test_manifest_without_schemas_falls_back_to_inference(spark, tmp_path):
+    """A manifest with no ``schemas`` entry (as written before schemas
+    were recorded) and a schema-evolved live set both plan through
+    Spark's footer inference, with unchanged results."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "t")
+    src = _type_matrix(spark, str(tmp_path / "staged"))
+    V.write_versioned(src.filter("i64 < 3"), t)
+    V.write_versioned(src.filter("i64 >= 3"), t)
+    want = V.read_versioned(spark, t)
+    want_schema, want_rows = want.schema.json(), _by_key(want)
+    for p in glob.glob(os.path.join(t, "_manifests", "v*.json")):
+        with open(p) as fh:
+            m = json.load(fh)
+        del m["schemas"]
+        with open(p, "w") as fh:
+            json.dump(m, fh)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    got = V.read_versioned(spark, t)
+    assert dag.nextJobId() > before  # footer inference ran
+    assert got.schema.json() == want_schema and _by_key(got) == want_rows
+
+    e = str(tmp_path / "evolved")
+    V.write_versioned(spark.range(0, 3).toDF("id"), e)
+    V.write_versioned(spark.range(3, 5).select("id", F.lit("en").alias("lang")), e)
+    before = dag.nextJobId()
+    merged = V.read_versioned(spark, e, merge_schema=True)
+    assert dag.nextJobId() > before
+    assert merged.columns == ["id", "lang"]
+    assert sorted((r.id, r.lang) for r in merged.collect()) == [
+        (0, None), (1, None), (2, None), (3, "en"), (4, "en")
+    ]
+
+
+@pytest.mark.parametrize(
+    "name, key",
+    [
+        ("versioned_time_travel", "version"),
+        ("versioned_update_restore", "version"),
+        ("versioned_cdf", "version"),
+        ("streaming_cdc_upsert", "user_id"),
+    ],
+)
+def test_versioned_builders_return_local_relation(spark, name, key):
+    """The versioned registry builders assemble their few result rows on
+    the driver: the frame is a LocalRelation in key order, also with the
+    session's Arrow conf off (the driver's vanilla session)."""
+    from ballista_mvp_spark.queries import ALL_QUERIES
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        df = ALL_QUERIES[name](spark, SF_SMALL)
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        keys = [r[key] for r in df.collect()]
+    finally:
+        spark.conf.set(conf, old)
+    assert keys and keys == sorted(keys)

@@ -489,3 +489,28 @@ def test_vacuum_reclaims_stale_tmp_manifests(spark, tmp_path):
     assert os.path.exists(fresh)       # possible in-flight commit kept
     # reads were never affected either way
     assert V.read_versioned(spark, t).count() == 1
+
+
+def test_dml_results_are_local_relations(eng, spark, tmp_path):
+    """Every transaction-log statement returns its few driver-built rows
+    as a LocalRelation, so collecting the result ships nothing through
+    Python workers."""
+    t = _tbl(spark, tmp_path)
+    eng.register_versioned("docs", t)
+    results = [
+        eng.sql(q)
+        for q in (
+            "INSERT INTO docs VALUES (200, 'c')",
+            "UPDATE docs SET tag = 'u' WHERE id = 1",
+            "DELETE FROM docs WHERE id = 2",
+            "MERGE INTO docs USING (SELECT 3 AS id, 'm' AS tag) ON id",
+            "OPTIMIZE docs",
+            "RESTORE TABLE docs TO VERSION AS OF 1",
+            "DESCRIBE HISTORY docs",
+            "VACUUM docs RETAIN 7 VERSIONS",
+        )
+    ]
+    for df in results:
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert [r.version for r in results[6].collect()] == list(range(1, 9))
