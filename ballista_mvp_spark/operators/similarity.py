@@ -18,12 +18,15 @@ embedding column. Two paths:
 
 from __future__ import annotations
 
+import logging
 import math
 import random
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def nested_double_lit(obj, elem_sql_type: str = "double") -> Column:
@@ -102,52 +105,42 @@ def nested_double_lit(obj, elem_sql_type: str = "double") -> Column:
             jdt = spark._jvm.org.apache.spark.sql.types.DataTypes.createArrayType(jdt, False)
         jlit = spark._jvm.org.apache.spark.sql.catalyst.expressions.Literal(jlit.value(), jdt)
         jcol = spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(jlit)
-        nested_double_lit.last_path = "fold"
         return Column(jcol)
     except ValueError:
         raise
-    except Exception:
-        nested_double_lit.last_path = "render"
+    except Exception as exc:
+        _log.debug(
+            "nested_double_lit: %s literal rendered as SQL text (fold unavailable: %s)",
+            typ, type(exc).__name__,
+        )
         return F.expr(render(obj))
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
-    """Spread a small scan across the cores before compute-heavy per-row
-    work (signature/code/distance derivations that cost ≫ the row bytes).
+    """Round-robin a small scan across `defaultParallelism` partitions
+    before compute-heavy per-row work (signature, code or distance
+    derivations that cost far more than the row bytes).
 
-    A bounded corpus (the ANN/all-pairs baselines) usually arrives as ONE
-    parquet row group, so every derivation chained on the scan runs as a
-    single task regardless of cluster size — measured r11: the whole ANN
-    encode/assign family was single-threaded at sf0.1 (guide §2.2
-    "scale-adaptive partitioning"). Round-robin repartition to
-    defaultParallelism fixes that for ~1 MB of shuffle.
+    A bounded corpus usually scans as one parquet row group, so every
+    derivation chained on it would run as one task. A scan that already
+    has `defaultParallelism` partitions is returned unchanged, so at
+    corpus scale this is a no-op. AQE cannot do it: its byte-based
+    coalescing would merge the partitions back.
 
-    Scale-adaptive by construction: a corpus big enough to matter at
-    100 TB scans as thousands of row-group partitions, the guard sees
-    partitions ≥ cores, and this is a no-op — the repartition exists
-    exactly when the scan is too small to parallelize itself. (AQE can't
-    help here: its byte-based coalescing would *merge* these partitions,
-    byte size being the wrong cost model for compute-bound stages.)
-
-    Applies ONLY to scan-shaped inputs (scan/filter/project, no shuffle
-    upstream): the partition probe is `df.rdd.getNumPartitions()`, and
-    under AQE converting a shuffling plan to an RDD MATERIALIZES its
-    query stages — an eager hidden job at plan-construction time
-    (measured r11: +12 s cold on a windowed-sample input) — while tiny
-    derived inputs also make the extra round-robin exchange a net loss
-    (sim_ann_ivf 2.3→3.3 s warm; both sites reverted, see
-    OPTIMIZATION_r11.md). r12 (VERDICT r11 #4): the contract is now
-    MECHANICAL, not a docstring convention — the analyzed logical plan
-    is walked (driver-side tree inspection, no job) and anything
-    beyond scan/filter/project/alias nodes makes the helper a NO-OP
-    before the `.rdd` probe is ever touched, so a future call site on
-    a shuffling input degrades to "not spread" instead of silently
-    re-triggering the hidden-job hazard
-    (tests/test_similarity_unroll.py::test_spread_refuses_shuffling_input)."""
-    if not _scan_shaped(df):
+    Only scan-shaped inputs (`_SCAN_SHAPED_NODES` throughout the
+    analyzed plan) are spread. The partition probe is
+    `df.rdd.getNumPartitions()`, which on a plan with a shuffle would run
+    its AQE query stages eagerly, at construction time; any other input
+    is returned unchanged without the probe. Each no-op logs one debug
+    event."""
+    node = _non_scan_node(df)
+    if node is not None:
+        _log.debug("spread_small_scan: not spread, plan node %s is not scan-shaped", node)
         return df
     n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    have = df.rdd.getNumPartitions()
+    if have >= n:
+        _log.debug("spread_small_scan: not spread, scan has %d >= %d partitions", have, n)
         return df
     return df.repartition(n)
 
@@ -167,95 +160,68 @@ _SCAN_SHAPED_NODES = frozenset(
 )
 
 
-def _scan_shaped(df: DataFrame) -> bool:
-    """True iff every node of the ANALYZED logical plan is a
-    scan/filter/project/alias — the only shapes `spread_small_scan` may
-    `.rdd`-probe and repartition (see its docstring). Walks the JVM
-    plan tree directly: O(nodes) py4j calls, no Spark job."""
+def _non_scan_node(df: DataFrame) -> str | None:
+    """Class name of the first node (pre-order) of the ANALYZED logical
+    plan that is not in `_SCAN_SHAPED_NODES`, or None when the whole plan
+    is scan-shaped. Walks the JVM plan tree: O(nodes) py4j calls, no
+    Spark job."""
 
-    def walk(p) -> bool:
-        if p.getClass().getSimpleName() not in _SCAN_SHAPED_NODES:
-            return False
+    def walk(p) -> str | None:
+        name = p.getClass().getSimpleName()
+        if name not in _SCAN_SHAPED_NODES:
+            return name
         ch = p.children()
-        return all(walk(ch.apply(i)) for i in range(ch.size()))
+        for i in range(ch.size()):
+            found = walk(ch.apply(i))
+            if found is not None:
+                return found
+        return None
 
     return walk(df._jdf.queryExecution().analyzed())
 
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. With `dim` (the statically-known vector width) the
-    sum unrolls to `dim` multiply-adds — ordinary codegen'd arithmetic.
-    Without it, the higher-order-function form is CodegenFallback:
-    interpreted per element with closure/boxing overhead, ~10× slower in
-    the pair-scoring hot loops (guide §1.2 "per-task work"; measured
-    r11: all-pairs cosine 40.8 s → 12.6 s, byte-identical output).
+    """Dot product. Without `dim` it is a higher-order `aggregate` over
+    `zip_with`, which Spark interprets per element. With `dim` (the true
+    vector width: only the first `dim` elements are summed) it unrolls to
+    `dim` multiply-adds on plain column references, seeded with
+    `_EJECT_SEED_SQL` — about 10× faster per pair, but ~dim plan nodes,
+    so pass `dim` only on high-pair-volume scoring paths.
 
-    Value identity: both forms fold left-to-right from 0.0 with the same
-    type promotions (((0.0 + a₁·b₁) + a₂·b₂) + …), so IEEE results are
-    bit-equal. `F.get` (0-based, NULL on out-of-range in ANSI and
-    non-ANSI alike) mirrors zip_with's null padding: a too-short array
-    yields NULL either way.
-
-    WHEN to pass dim (measured r11, OPTIMIZATION_r11.md): only on
-    high-pair-volume scoring paths (all-pairs baselines, LSH-bucket
-    verify joins — ≥10⁶ evaluations). The unrolled tree is ~400 plan
-    nodes vs ~10, costing ~0.5-1 s of Catalyst+codegen per query and
-    duplicating each argument expression 3·dim times — a measured NET
-    LOSS for small candidate sets (IVF probes, top-k reranks), which
-    keep the compact HOF form. Never pass dim unless it equals the true
-    vector width: the unrolled form sums only the first `dim` elements."""
+    Both forms fold left to right from 0.0 with the same promotions, so
+    the results are bit-equal; a too-short array gives NULL either way
+    (`get` is NULL out of range, like zip_with's padding)."""
     if dim is None:
         return F.aggregate(
             F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
         )
-    an, bn = _plain_name(a), _plain_name(b)
-    if an and bn:
-        return F.expr(_dot_sql(an, bn, dim))
-    e: Column = F.lit(0.0)
-    for i in range(dim):
-        e = e + F.get(a, i) * F.get(b, i)
-    return e
+    return F.expr(_dot_sql(_plain_name(a), _plain_name(b), dim))
 
 
-def _plain_name(c: Column) -> str | None:
-    """The bare column name when `c` is a plain reference, else None —
-    gate for rendering an unrolled kernel as ONE SQL string instead of
-    per-operator py4j calls (the 64-dim unrolled cosine is ~450 Column
-    ops ≈ 0.6 s of pure DRIVER time per call site per invocation,
-    measured r11; one F.expr parse of the identical text is ~5 ms).
-    Renders only what is provably a simple identifier; every other
-    shape keeps the Column-composition path."""
+def _plain_name(c: Column) -> str:
+    """The bare column name of `c`. Unrolled kernels render as one SQL
+    parse over plain column references (composing ~dim Column ops costs
+    ~0.6 s of driver time per call site); any other argument raises —
+    name it first with `withColumn`."""
     m = re.fullmatch(r"Column<'([A-Za-z_][A-Za-z0-9_]*)'>", str(c))
-    return m.group(1) if m else None
+    if m is None:
+        raise ValueError(
+            f"an unrolled vector kernel (dim=...) needs a plain column reference, got {c}"
+        )
+    return m.group(1)
 
 
-# Whole-stage-codegen EJECTOR seed (r12): `aggregate` is a higher-order
-# function, i.e. CodegenFallback — ANY expression containing one
-# disqualifies its operator from whole-stage codegen, so the operator
-# runs standalone with its OWN generated projection, where expressions
-# split into <8 KB methods bound to the input row and HotSpot JITs
-# them. Folding an EMPTY array returns the zero element, so this IS
-# bit-exact 0.0D (validated: SELECT aggregate(array(), 0.0D,
-# (acc,v)->acc) = 0.0) and the per-row cost is one empty fold. Used to
-# seed the unrolled dot in O(n²) pair-scoring projections: fused into
-# the join's whole-stage method the ~dim-term chain either overflows
-# janino's 64 KB limit (a failed compile retried on EVERY execution —
-# the r11 residual tax) or compiles into one >8 KB method HotSpot
-# never JITs (measured r12: 3× SLOWER than the failed-compile
-# fallback). The session-wide escape
-# (spark.sql.codegen.hugeMethodLimit=8000) was measured and REJECTED:
-# it costs 5-15% on ordinary bench members (interleaved A/B ×2,
-# OPTIMIZATION_r12.md).
+# Seed of every unrolled dot: an empty-array fold, bit-exact 0.0D. As a
+# higher-order function it is CodegenFallback, so the operator scoring
+# the dot runs outside whole-stage codegen, where the long multiply-add
+# chain splits into small methods HotSpot JITs; fused, it overflows
+# janino's 64 KB limit or becomes one >8 KB method that never JITs
+# (OPTIMIZATION_r12.md).
 _EJECT_SEED_SQL = "aggregate(array(), 0.0D, (acc, v) -> acc)"
 
 
-def _dot_sql(an: str, bn: str, dim: int, seed: str = "0.0D") -> str:
-    """Text form of the unrolled dot — token-for-token the tree the
-    Column loop builds (same left fold from 0.0D, same get() calls), so
-    the analyzed plans and therefore the results are identical
-    (tests/test_similarity_unroll.py pins text↔Column↔HOF equality).
-    ``seed`` replaces the literal zero (see _EJECT_SEED_SQL)."""
-    e = seed
+def _dot_sql(an: str, bn: str, dim: int) -> str:
+    e = _EJECT_SEED_SQL
     for i in range(dim):
         e = f"({e} + (get({an}, {i}) * get({bn}, {i})))"
     return e
@@ -269,74 +235,24 @@ def _norm_sql(an: str, dim: int) -> str:
 
 
 def norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm; same unrolled-vs-HOF contract as `dot` (identical left
-    fold from 0.0, so values are bit-equal either way)."""
+    """L2 norm, with `dot`'s `dim` contract. The unrolled sum starts
+    from a literal 0.0: norms are per-row work on the side selects and
+    stay in whole-stage codegen."""
     if dim is None:
         return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    an = _plain_name(a)
-    if an:
-        return F.expr(_norm_sql(an, dim))
-    e: Column = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(a, i)
-        e = e + x * x
-    return F.sqrt(e)
+    return F.expr(_norm_sql(_plain_name(a), dim))
 
 
 def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    # zero-magnitude vectors (quantize_embeddings handles them too) get
-    # similarity 0.0 instead of an ANSI DIVIDE_BY_ZERO that would kill
-    # every cosine-based operator on one bad embedding
-    an, bn = (_plain_name(a), _plain_name(b)) if dim else (None, None)
-    if dim and an and bn:
-        # one parse of the exact tree the Column form composes (~450
-        # py4j round trips ≈ 0.6 s driver time saved per call site)
-        d = f"({_norm_sql(an, dim)} * {_norm_sql(bn, dim)})"
-        return F.expr(
-            f"CASE WHEN ({d} != 0) THEN ({_dot_sql(an, bn, dim)} / {d}) "
-            f"ELSE 0.0D END"
-        )
-    d = norm(a, dim) * norm(b, dim)
-    return F.when(d != 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
+    return cosine_from_norms(a, b, norm(a, dim), norm(b, dim), dim)
 
 
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column, dim: int | None = None) -> Column:
-    """`cosine(a, b, dim)` with the two L2 norms read from columns
-    computed BEFORE a pair join instead of re-derived per pair (r12,
-    VERDICT r11 #5 — guide §1.2 "don't compute things you throw away").
-
-    On an O(n²) pair-scoring stage the norms are a per-ROW property
-    recomputed per PAIR: 2·n² norm folds where 2·n suffice — at sf0.1's
-    2M pairs that is ~2/3 of the stage's arithmetic. It is also the
-    janino fix: the r11 unrolled `cosine` inlined dot + both norms
-    (~3·dim get() terms) into the fused BNLJ consume method, which
-    overflowed janino's 64 KB limit, so the FAILED whole-stage compile
-    was retried on every execution and the stage ran interpreted. The
-    pair stage now carries only the dot chain (~dim terms) — it
-    compiles, and the norm folds run once per row on the pre-join
-    projections.
-
-    Value identity: the norm columns are the SAME `norm()` expression
-    evaluated on the same row values (IEEE-deterministic), and this
-    builds the SAME `CASE WHEN (na*nb != 0) THEN dot/(na*nb) ELSE 0.0`
-    tree as `cosine` — results are bit-equal, pinned by
-    tests/test_similarity_unroll.py."""
-    names = [_plain_name(c) for c in (a, b, na, nb)] if dim else [None]
-    if dim and all(names):
-        an, bn, nan_, nbn = names
-        d = f"({nan_} * {nbn})"
-        return F.expr(
-            f"CASE WHEN ({d} != 0) THEN "
-            f"({_dot_sql(an, bn, dim, seed=_EJECT_SEED_SQL)} / {d}) "
-            f"ELSE 0.0D END"
-        )
+    """Cosine of `a` and `b` given their L2 norms `na` and `nb`. Pair
+    scorers compute the norms once per row before the join, so the pair
+    stage carries only the dot. A zero-magnitude or NULL vector scores
+    0.0 instead of raising an ANSI DIVIDE_BY_ZERO."""
     d = na * nb
-    if dim:
-        # Column fallback keeps the same eject-seeded left fold
-        e: Column = F.expr(_EJECT_SEED_SQL)
-        for i in range(dim):
-            e = e + F.get(a, i) * F.get(b, i)
-        return F.when(d != 0, e / d).otherwise(F.lit(0.0))
     return F.when(d != 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
 
 
@@ -347,37 +263,22 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 5,
     dim: int | None = None,
-    hoist_norms: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k per query. Output: (query_id, neighbor_id,
-    cos_sim, rank). Self-matches excluded. Pass `dim` when the vector
-    width is statically known — the scoring loop then runs as codegen'd
-    arithmetic instead of interpreted HOFs (see `dot`).
-
-    `hoist_norms` (r12, measured decision — the `dim` convention):
-    norms computed once per row on the side selects instead of per
-    pair. WINS on single/few-partition sample inputs where one task
-    scores a dense pair block (sim_knn_eval 1.31→0.96, sim_ranking_
-    metrics 1.50→1.05 warm, interleaved ×2); LOSES ~10-18% on the
-    spread-corpus × tiny-query-set shape (sim_topk 0.71→0.79,
-    sim_hybrid_rrf 1.23→1.48) where per-task pair blocks are small and
-    the per-row fold + wider rows outweigh the per-pair savings —
-    those call sites pass False and keep their r11-measured shape."""
+    cos_sim, rank). Self-matches excluded. Norms are computed once per
+    row on the side selects; pass `dim` when the vector width is
+    statically known (see `dot`)."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        *([norm(F.col(vec_col), dim).alias("_nq")] if hoist_norms else []),
+        norm(F.col(vec_col), dim).alias("_nq"),
     )
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        *([norm(F.col(vec_col), dim).alias("_nc")] if hoist_norms else []),
+        norm(F.col(vec_col), dim).alias("_nc"),
     )
-    score = (
-        cosine_from_norms(F.col("qv"), F.col("cv"), F.col("_nq"), F.col("_nc"), dim)
-        if hoist_norms
-        else cosine(F.col("qv"), F.col("cv"), dim)
-    )
+    score = cosine_from_norms(F.col("qv"), F.col("cv"), F.col("_nq"), F.col("_nc"), dim)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -422,9 +323,7 @@ def maxsim_topk(
     qpos = (
         F.col(pos_col) if pos_col is not None else F.monotonically_increasing_id()
     )
-    # norms hoisted to the per-row selects (r12) — same rationale as
-    # brute_force_topk: the guard's norm folds were paid per (qvec,
-    # corpus-vector) pair, twice each on the interpreted path
+    # norms once per row on the side selects, not per (qvec, corpus-vector) pair
     q = query_vecs.select(
         F.col(doc_col).alias("query_id"),
         qpos.alias("_qpos"),
@@ -548,14 +447,6 @@ def _bucket_of(vec: Column, planes_col: Column) -> Column:
     )
 
 
-def _signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Bucket id for ONE hyperplane table, shipped as a single nested-array
-    literal (one Catalyst Literal node instead of planes*dim nodes — the
-    naive per-float F.lit form costs seconds of driver-side plan compile at
-    production plane counts)."""
-    return _bucket_of(vec, nested_double_lit(planes))
-
-
 def _signatures_all(vec: Column, tables: list[list[list[float]]]) -> Column:
     """array<struct<tbl,bucket>> — every table's signature in one compact
     expression over a single triple-nested literal. Replaces the per-table
@@ -594,8 +485,7 @@ def lsh_ann_topk(
         )
 
     qb = bucketize(queries, "q")
-    # r11: corpus-side signature derivation is the heavy per-row work —
-    # spread the scan so it parallelizes (see spread_small_scan)
+    # corpus-side signature derivation is the heavy per-row work
     cb = bucketize(spread_small_scan(candidates), "c")
     cand = (
         cb.join(F.broadcast(qb), ["tbl", "bucket"])
@@ -635,18 +525,16 @@ def cosine_dup_pairs(
 
     The unscoped form broadcasts the b side, so its failure mode on an
     oversized input is a broadcast-build OOM, not the old slow-but-
-    progressing CartesianProduct — `max_unscoped_rows` (ADVICE r9)
+    progressing CartesianProduct — `max_unscoped_rows`
     guards that with a LIMIT-bounded count and an actionable error
     (use `scope`/lsh_cosine_dup_pairs, or None to disable).
 
-    NOTE (ADVICE r10): the unscoped guard is an EAGER Spark action
+    NOTE: the unscoped guard is an EAGER Spark action
     (limit(cap+1).count()) at DataFrame-construction time — plan-only
     consumers of the unscoped form trigger that O(cap)-row scan on
     every call; pass max_unscoped_rows=None (or `scope`) to stay lazy."""
-    # norms are a per-ROW property: compute them on the O(n) side
-    # selects, not per PAIR inside the O(n²) join stage (r12 — see
-    # cosine_from_norms; also shrinks the pair stage's generated code
-    # under janino's 64 KB whole-stage limit, so it compiles again)
+    # norms once per row on the O(n) side selects, not per pair in the
+    # O(n²) join stage
     a = df.select(
         F.col(id_col).alias("a"),
         F.col(vec_col).alias("va"),
@@ -679,20 +567,8 @@ def cosine_dup_pairs(
                 f"Block first: pass `scope` or use lsh_cosine_dup_pairs "
                 f"(or raise max_unscoped_rows if it genuinely fits)."
             )
-        # r11: spread the probe side across the cores BEFORE the
-        # nested-loop join. The probe input is typically one small scan
-        # partition (the bounded all-pairs corpus fits one file), so the
-        # O(n²) pair scoring otherwise runs as a SINGLE task — measured
-        # 17.2 s → 2.55 s warm at sf0.1 (2M pairs) from this line alone.
-        # The count must be explicit (defaultParallelism, i.e. the
-        # core count locally / total executor cores on a cluster): a
-        # bare repartition() is AQE-coalesced back to one partition
-        # because byte-based sizing is the wrong signal for a
-        # compute-bound nested-loop stage (2000 rows ≈ 1 MB but 2M
-        # cosine evaluations).
-        joined = a.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        ).crossJoin(F.broadcast(b))
+        # the O(n²) scoring runs on the probe side's partitions
+        joined = spread_small_scan(a).crossJoin(F.broadcast(b))
     return (
         joined.filter(F.col("a") < F.col("b"))
         .select(
@@ -755,8 +631,7 @@ def lsh_cosine_dup_pairs(
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    # norm computed once per corpus row on the vector map, not per
-    # candidate pair in the verify stage (r12 — see cosine_from_norms)
+    # norm once per corpus row on the vector map, not per candidate pair
     vmap = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
@@ -993,16 +868,14 @@ def semantic_dedup(
     cross-run-determinism pytests rather than a DuckDB oracle."""
     centroids = fit_quantizer(df, id_col, vec_col, n_cells, seed)
     best = F.element_at(F.array_sort(_cell_dists(F.col(vec_col), centroids)), 1)
-    # r11: cell assignment (n_cells×dim distance per row) is the heavy
-    # corpus-side pass — spread the scan (see spread_small_scan); the
-    # quantizer fit above samples from the UNspread df (bounded
-    # xxhash64-ranked sample), so centroids are unaffected
+    # cell assignment (n_cells×dim distance per row) is the heavy
+    # corpus-side pass; the quantizer fit above samples the unspread df,
+    # so the centroids do not depend on the spread
     cells = spread_small_scan(df).select(
         F.col(id_col).alias(id_col),
         F.col(vec_col).alias(vec_col),
         best["cell"].alias("cell"),
     ).persist()
-    cent_lit = F.lit(centroids)
     pairs = cosine_dup_pairs(
         cells, id_col=id_col, vec_col=vec_col, threshold=threshold, scope=F.col("cell"),
         dim=dim,
@@ -1010,12 +883,11 @@ def semantic_dedup(
     losers = pairs.select(F.col("b").alias(id_col)).distinct()
     return (
         cells.join(losers.withColumn("_dup", F.lit(True)), id_col, "left")
+        .withColumn("_cent", F.element_at(F.lit(centroids), F.col("cell") + 1))
         .select(
             id_col,
             "cell",
-            F.round(cosine(F.col(vec_col), F.element_at(cent_lit, F.col("cell") + 1), dim), 6).alias(
-                "centroid_sim"
-            ),
+            F.round(cosine(F.col(vec_col), F.col("_cent"), dim), 6).alias("centroid_sim"),
             F.coalesce(F.col("_dup"), F.lit(False)).alias("is_dup"),
         )
     )
@@ -1132,9 +1004,8 @@ def pq_adc_topk(
     broadcast (Q ≪ N); one window for the two top-k cuts."""
     books = fit_pq(candidates, id_col, vec_col, dim, m, ksub, seed)
     dsub = dim // m
-    # r11: the encode is the heavy corpus-side pass (m×ksub×dsub
-    # multiply-adds + m interpreted array_sorts per row) — spread the
-    # scan (see spread_small_scan; fit_pq samples from the UNspread df)
+    # the encode is the heavy corpus-side pass (m×ksub×dsub multiply-adds
+    # + m interpreted array_sorts per row); fit_pq samples the unspread df
     coded = pq_encode(spread_small_scan(candidates), books, id_col, vec_col)
 
     qvec = F.col("_qv")
@@ -1214,12 +1085,9 @@ def ivfpq_topk(
     dsub = dim // m
 
     best_cell = F.element_at(F.array_sort(_cell_dists(F.col(vec_col), centroids)), 1)["cell"]
-    # r11: codes + cell come out of ONE spread projection over the
-    # corpus scan. The previous shape ran pq_encode and the cell
-    # assignment as two separate single-task corpus passes and then
-    # equi-joined them back on _id — a self-join of two derivations of
-    # the same scan (one full extra pass + one shuffle for nothing).
-    # The quantizer/codebook fits above sample from the UNspread df.
+    # codes + cell come out of ONE spread projection over the corpus
+    # scan (no self-join of two derivations of it); the quantizer and
+    # codebook fits above sample the unspread df
     coded = spread_small_scan(candidates).select(
         F.col(id_col).alias("_id"),
         _pq_codes(F.col(vec_col), books).alias("codes"),

@@ -720,8 +720,8 @@ def dedup_embedding_det(spark, sf_dir):
     # projections (a pinned broadcast of 10⁹×64 doubles cannot exist);
     # the joins shuffle proportionally to candidates + ids, and AQE
     # still picks broadcast at small scale on its own
-    # norms computed once per corpus row on the O(n) projections, not
-    # per candidate pair in the verify stage (r12, cosine_from_norms)
+    # norms once per corpus row on the O(n) projections, not per
+    # candidate pair in the verify stage
     va = emb.select(
         F.col("vec_id").alias("a"),
         F.col("embedding").alias("va"),
@@ -3420,10 +3420,7 @@ def sim_topk(spark, sf_dir):
     )
     queries = emb.filter(F.col("vec_id") < 8)
     return S.brute_force_topk(
-        # hoist_norms=False: the spread-corpus × 8-query shape measured
-        # it a ~10% loss (see brute_force_topk docstring, r12)
-        S.spread_small_scan(emb), queries, "vec_id", "embedding", k=5,
-        hoist_norms=False,
+        S.spread_small_scan(emb), queries, "vec_id", "embedding", k=5
     )
 
 
@@ -3823,9 +3820,6 @@ def sim_hybrid_rrf(spark, sf_dir):
         S.brute_force_topk(
             S.spread_small_scan(emb), emb.filter(F.col("vec_id") == 0),
             "vec_id", "embedding", k=20,
-            # hoist_norms=False: same spread-corpus shape as sim_topk
-            # (r12 measured loss — brute_force_topk docstring)
-            hoist_norms=False,
         )
         .select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("rank_vec"))
     )

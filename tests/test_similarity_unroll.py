@@ -11,6 +11,8 @@ branch) and NULL vectors.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,27 +72,29 @@ def test_cosine_unrolled_zero_and_null_vectors(spark):
     assert out[1].hof == 0.0 and out[1].unr == 0.0
 
 
-def test_text_rendered_unroll_matches_column_fallback(emb):
-    # r11: plain-named columns render the unrolled kernel as ONE SQL
-    # parse (~450 py4j calls saved per call site); a non-identifier
-    # column name forces the Column-composition fallback. Both must be
-    # bit-equal — and the canonicalized analyzed plans identical.
+def test_unrolled_kernel_rejects_non_plain_argument(emb):
+    """With `dim` the kernels render as SQL text over plain column
+    references; any other argument is an error, not a slow path."""
+    j = emb.limit(5).select(F.col("embedding").alias("v"), F.col("embedding").alias("va x"))
+    for bad in (F.col("`va x`"), F.element_at(F.array(F.col("v")), 1)):
+        with pytest.raises(ValueError, match="plain column reference"):
+            S.cosine(F.col("v"), bad, 64)
+        with pytest.raises(ValueError, match="plain column reference"):
+            S.norm(bad, 64)
+    # without `dim` the same arguments take the higher-order form
+    assert j.select(S.cosine(F.col("v"), F.col("`va x`")).alias("c")).count() == 5
+
+
+def test_text_rendered_unroll_matches_column_tree(emb):
+    # the SQL-text unrolled cosine must analyze to the SAME canonical
+    # plan as the hand-composed Column tree: eject-seeded dot, 0.0-seeded
+    # norms (equivalence by construction, not by sampled values)
     v = F.col("embedding").cast("array<double>")
     a = emb.limit(60).select(F.col("vec_id").alias("a"), v.alias("va"))
     b = emb.limit(60).select(F.col("vec_id").alias("b"), v.alias("vb"))
     j = a.crossJoin(F.broadcast(b)).filter(F.col("a") < F.col("b"))
     text = j.select("a", "b", S.cosine(F.col("va"), F.col("vb"), 64).alias("c"))
-    j2 = j.withColumnRenamed("va", "va x").withColumnRenamed("vb", "vb x")
-    fallback = j2.select(
-        "a", "b", S.cosine(F.col("`va x`"), F.col("`vb x`"), 64).alias("c")
-    )
-    assert S._plain_name(F.col("`va x`")) is None  # the gate really fell back
-    rows_t = {(r.a, r.b): r.c for r in text.collect()}
-    rows_f = {(r.a, r.b): r.c for r in fallback.collect()}
-    assert rows_t == rows_f
-    # same-named frames: text form and hand-built Column form must
-    # analyze to the SAME canonical plan (equivalence by construction)
-    e = F.lit(0.0)
+    e = F.expr("aggregate(array(), 0.0D, (acc, v) -> acc)")
     for k in range(64):
         e = e + F.get(F.col("va"), k) * F.get(F.col("vb"), k)
     na = F.lit(0.0)
@@ -111,22 +115,19 @@ def test_text_rendered_unroll_matches_column_fallback(emb):
 
 
 def test_spread_refuses_shuffling_input(spark):
-    """r12 (VERDICT r11 #4): spread_small_scan's scan-shaped-input
-    contract is mechanical — a shuffling/derived plan is returned
-    UNCHANGED (identity, so no `.rdd` probe and no hidden AQE stage
-    materialization), while a small scan-shaped input still gets the
-    round-robin spread."""
-    from pyspark.sql import functions as F
-
+    """spread_small_scan's scan-shaped-input contract is mechanical — a
+    shuffling/derived plan is returned UNCHANGED (identity, so no `.rdd`
+    probe and no hidden AQE stage materialization), while a small
+    scan-shaped input still gets the round-robin spread."""
     from ballista_mvp_spark.operators.similarity import (
-        _scan_shaped,
+        _non_scan_node,
         spread_small_scan,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     # scan-shaped inputs: scan, projected/filtered/aliased scan
     scanish = emb.select("vec_id", "embedding").filter(F.col("vec_id") >= 0)
-    assert _scan_shaped(emb) and _scan_shaped(scanish.alias("s"))
+    assert _non_scan_node(emb) is None and _non_scan_node(scanish.alias("s")) is None
     spread = spread_small_scan(scanish)
     assert spread is not scanish  # the spread happened (tiny scan)
     assert "Repartition" in spread._jdf.queryExecution().analyzed().treeString()
@@ -140,14 +141,27 @@ def test_spread_refuses_shuffling_input(spark):
     )
     joined = emb.join(emb.select(F.col("vec_id").alias("_q")), F.col("vec_id") == F.col("_q"))
     for bad in (agg, win, joined, emb.repartition(2), emb.limit(5)):
-        assert not _scan_shaped(bad)
+        assert _non_scan_node(bad) is not None
         assert spread_small_scan(bad) is bad  # identity no-op, no probe
+
+
+def test_spread_no_op_is_logged(spark, caplog):
+    """The spread's no-op is a visible fallback: one debug event naming
+    the first node that is not scan-shaped, and none when it spreads."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    with caplog.at_level(logging.DEBUG, logger=S.__name__):
+        S.spread_small_scan(emb.select("vec_id", "embedding"))
+    assert not [r for r in caplog.records if "spread_small_scan" in r.getMessage()]
+    with caplog.at_level(logging.DEBUG, logger=S.__name__):
+        S.spread_small_scan(emb.groupBy("vec_id").count())
+    events = [r.getMessage() for r in caplog.records if "spread_small_scan" in r.getMessage()]
+    assert events == ["spread_small_scan: not spread, plan node Aggregate is not scan-shaped"]
 
 
 def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
     """r12: the pre-join-norm form (cosine_from_norms + eject seed —
     the empty-array fold IS 0.0D) must be bit-equal to the inline
-    cosine, text path AND Column-fallback path, including the zero-
+    cosine, with plain and computed norm columns, including the zero-
     vector d==0 branch."""
     df = emb.limit(80).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -176,8 +190,8 @@ def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
             F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), 64
         ).alias("c"),
     )
-    # Column-fallback path: a non-plain-name arg (_na * 1.0 is an IEEE
-    # identity) forces the Column-composition branch
+    # computed norm column (_na * 1.0 is an IEEE identity): only the
+    # vectors must be plain references
     pre_fb = j.select(
         "a", "b",
         S.cosine_from_norms(
@@ -192,7 +206,7 @@ def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
     rows_p = {(r.a, r.b): r.c for r in pre.collect()}
     rows_f = {(r.a, r.b): r.c for r in pre_fb.collect()}
     assert rows_i == rows_p  # exact ==: bit-equality contract
-    assert rows_i == rows_f  # _na*1.0 is IEEE-identity; fallback path pinned
+    assert rows_i == rows_f  # _na*1.0 is IEEE-identity
 
 
 def _physical_nodes(plan, fused=False):
@@ -219,13 +233,17 @@ def _physical_nodes(plan, fused=False):
 
 @pytest.mark.parametrize(
     "query, marker",
-    [("sim_topk", "aggregate("), ("dedup_embedding_exact", "aggregate([], 0.0")],
-    ids=["sim_topk", "dedup_embedding_exact"],
+    [
+        ("sim_topk", "aggregate("),
+        ("dedup_embedding_exact", "aggregate([], 0.0"),
+        ("sim_ann_lsh", "aggregate([], 0.0"),
+    ],
+    ids=["sim_topk", "dedup_embedding_exact", "sim_ann_lsh"],
 )
 def test_pair_scoring_stays_out_of_whole_stage_codegen(spark, query, marker):
     """Sentinel for the WSCG ejection: the pair-scoring expression holds a
     higher-order `aggregate` (the HOF dot in sim_topk, the _EJECT_SEED_SQL
-    seed in the unrolled cosine_from_norms chain), which is
+    seed of every unrolled dot), which is
     CodegenFallback, so its operator runs outside whole-stage codegen.
     A Spark that fused it would bring back the >8 KB-method JIT cliff."""
     from ballista_mvp_spark.queries import ALL_QUERIES
