@@ -241,10 +241,11 @@ def decontaminate(
     estimate for an explode+distinct over a small parquet file NEVER
     grows with the real shingle count, so the previous un-hinted shape
     statically chose BroadcastHashJoin on the CORPUS-derived shingle set
-    and kept it until the broadcast build physically failed — measured in
-    tools/decon_scale.py: still broadcasting at 34M distinct shingles
-    (~0.3 GB hashed relation), death by 'Not enough memory to build and
-    broadcast' at ~67M on a 16g driver, with zero graceful degradation
+    and kept it until the broadcast build physically failed — measured
+    by `tools/scale_ladder.py text_decontaminate`: still broadcasting at
+    34M distinct shingles (~0.3 GB hashed relation), death by 'Not
+    enough memory to build and broadcast' at ~67M on a 16g driver, with
+    zero graceful degradation
     (SCALE.md round 9). At 100 TB the corpus shingle set is multi-TB;
     the eval side is MBs. Pass the corpus as `train`, always.
 

@@ -34,35 +34,10 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _canon_value(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            return "0"  # normalize -0.0
-        return repr(round(v, 9))
-    if isinstance(v, bool):
-        return str(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon_value(x) for x in v) + "]"
-    return str(v)
-
-
-def _canon_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_canon_value(r[i]) for i in order) for r in rows]
-    out.sort()
-    return out
-
-
 class DriverUnsafeCell(TypeError):
     """A result cell the grading driver's pandas canonicalization cannot
     sort/hash (array/map/struct) or renders engine-dependently (Decimal
-    vs float64). Raised only in strict mode."""
+    vs float64). ``compare_strict`` reports it as a failed query."""
 
 
 def _strict_render(v) -> str:
@@ -70,7 +45,7 @@ def _strict_render(v) -> str:
     pandas form of both result sets (Spark ``toPandas`` vs DuckDB
     ``.df()``), where containers crash the sort (``unhashable type:
     'list'``, CORRECTNESS_r03) and Spark's ``Decimal('20828.00')`` never
-    string-matches DuckDB's float64 ``20828.0``. Strict mode therefore
+    string-matches DuckDB's float64 ``20828.0``. The comparison therefore
     REJECTS containers and Decimals outright — oracle-backed queries
     must pre-render them (array_join / CAST AS STRING) on both engines."""
     if isinstance(v, (list, tuple, dict, set, np.ndarray)):
@@ -135,52 +110,17 @@ class CompareResult:
         return f"[{s}] {self.name}: spark={self.spark_rows} oracle={self.oracle_rows} {self.detail}"
 
 
-def compare(
-    name: str,
-    spark_df: DataFrame,
-    oracle_sql: str | None,
-    con: duckdb.DuckDBPyConnection,
-    strict: bool = False,
-) -> CompareResult:
-    if strict:
-        return compare_strict(name, spark_df, oracle_sql, con)
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    s_cols = spark_df.columns
-    if oracle_sql is None:
-        # the driver's weaker rows-only check still requires rows > 0 —
-        # `>= 0` was vacuously green on an empty (regressed) result
-        return CompareResult(name, len(s_rows) > 0, len(s_rows), -1, "rows-only")
-    o_rel = con.sql(oracle_sql)
-    o_cols = list(o_rel.columns)
-    o_rows = [tuple(r) for r in o_rel.fetchall()]
-    if sorted(c.lower() for c in s_cols) != sorted(c.lower() for c in o_cols):
-        return CompareResult(
-            name, False, len(s_rows), len(o_rows), f"schema: spark={sorted(s_cols)} oracle={sorted(o_cols)}"
-        )
-    if len(s_rows) != len(o_rows):
-        return CompareResult(name, False, len(s_rows), len(o_rows), "row count mismatch")
-    sc = _canon_rows([c.lower() for c in s_cols], s_rows)
-    oc = _canon_rows([c.lower() for c in o_cols], o_rows)
-    if sc != oc:
-        diff = next((i, a, b) for i, (a, b) in enumerate(zip(sc, oc)) if a != b)
-        return CompareResult(
-            name, False, len(s_rows), len(o_rows), f"value mismatch at sorted-row {diff[0]}:\n  spark={diff[1]}\n  duck ={diff[2]}"
-        )
-    return CompareResult(name, True, len(s_rows), len(o_rows))
-
-
 def compare_strict(
     name: str,
     spark_df: DataFrame,
     oracle_sql: str | None,
     con: duckdb.DuckDBPyConnection,
 ) -> CompareResult:
-    """Driver-faithful comparison: both result sets go through pandas
-    exactly like the grading harness (Spark ``toPandas`` / DuckDB
-    ``.df()``) and any cell the driver cannot canonicalize FAILS the
-    query here first. This exists because round 3 shipped 5 queries that
-    were green under the lenient ``compare`` (which stringifies lists
-    and Decimals) yet red under the driver."""
+    """Driver-faithful comparison, the only one: both result sets go
+    through pandas exactly like the grading harness (Spark ``toPandas`` /
+    DuckDB ``.df()``), and any cell the driver cannot canonicalize FAILS
+    the query here first. A query without oracle SQL passes on rows > 0,
+    the driver's weaker rows-only check."""
     s_pdf = spark_df.toPandas()
     if oracle_sql is None:
         return CompareResult(name, len(s_pdf) > 0, len(s_pdf), -1, "rows-only")

@@ -26,7 +26,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """Cores for ``local[N]`` and the shuffle width: ``SPARK_GRAFT_CPUS`` if
+    set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def build_session(
@@ -41,9 +45,9 @@ def build_session(
     ``SessionManager::create_session`` (session_manager.rs:34-57) — one
     place that pins every execution-relevant config.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
-    nparts = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nparts = shuffle_partitions or cpus
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -22,21 +22,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import events_frame
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def _ts_to_ltz(src: DataFrame, schema) -> DataFrame:
-    """Normalize the events `ts` column to TIMESTAMP (LTZ), which
-    watermarks require. Testdata generations have shipped it as parquet
-    TIMESTAMP(NANOS) (read as bigint under nanosAsLong → convert ns→µs)
-    and as plain µs NTZ (Spark 4 infers TIMESTAMP_NTZ → cast; value-
-    identical under the engine's UTC session timezone)."""
-    kind = dict((f.name, f.dataType.simpleString()) for f in schema).get("ts")
-    if kind == "bigint":
-        return src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if kind == "timestamp_ntz":
-        return src.withColumn("ts", F.col("ts").cast("timestamp"))
-    return src
 
 
 def tumbling_agg(events: DataFrame, window_len: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -408,16 +396,16 @@ def stream_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the events parquet with ts normalized to LTZ."""
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(path).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return _ts_to_ltz(src, schema)
+
+    def read() -> DataFrame:
+        schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+        return (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+
+    return events_frame(spark, read)
 
 
 def run_incremental_sink(

@@ -68,6 +68,25 @@ def _machine_state() -> dict:
     return state
 
 
+def time_pass(spark, sf_dir: str, names) -> dict[str, dict]:
+    """One timed pass over registry queries, in order. Per name:
+    ``{"build_s", "wall_s"}`` (``perf_counter`` seconds for the builder
+    call, and for the builder call plus ``collect()``), or ``{"error"}``
+    if the query raised; one bad query does not stop the pass."""
+    out: dict[str, dict] = {}
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            df = ALL_QUERIES[name](spark, sf_dir)
+            build_s = time.perf_counter() - t0
+            df.collect()
+        except Exception as e:  # noqa: BLE001 — recorded, the caller decides
+            out[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
+            continue
+        out[name] = {"build_s": build_s, "wall_s": time.perf_counter() - t0}
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -86,16 +105,16 @@ def main() -> None:
     # registry's working set). Pass 2 thus measures per-query planning +
     # execution on a warm JVM; only code whose literals change between
     # runs recompiles.
-    times: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        t0 = time.perf_counter()
-        ALL_QUERIES[name](spark, sf_dir).collect()
-        times[name] = round(time.perf_counter() - t0, 3)
-    for name in BENCH_QUERIES:
-        t0 = time.perf_counter()
-        ALL_QUERIES[name](spark, sf_dir).collect()
-        warm[name] = round(time.perf_counter() - t0, 3)
+    cold_pass = time_pass(spark, sf_dir, BENCH_QUERIES)
+    warm_pass = time_pass(spark, sf_dir, BENCH_QUERIES)
+    errors = {
+        n: r["error"] for p in (cold_pass, warm_pass) for n, r in p.items() if "error" in r
+    }
+    if errors:
+        print(json.dumps({"errors": errors}), file=sys.stderr)
+        sys.exit(1)
+    times = {n: round(r["wall_s"], 3) for n, r in cold_pass.items()}
+    warm = {n: round(r["wall_s"], 3) for n, r in warm_pass.items()}
 
     total = round(sum(times.values()), 3)
     # `value` stays the cold total so BENCH_r01..rN remain directly

@@ -8,7 +8,7 @@ import os
 
 import pytest
 
-from ballista_mvp_spark.oracle import compare
+from ballista_mvp_spark.oracle import compare_strict
 from ballista_mvp_spark.queries import ALL_ORACLES, ALL_QUERIES
 
 from .conftest import SF_SMALL
@@ -45,12 +45,9 @@ NAMES = sorted(ALL_QUERIES) if os.environ.get("SPARK_GRAFT_FULL") else CORE
 
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(name, spark, duck_small):
-    # strict=True = the driver-faithful pandas canonicalization; the
-    # lenient path let 5 array/decimal-output queries through in round 3
-    # that the driver then red-flagged (CORRECTNESS_r03).
-    res = compare(
+    res = compare_strict(
         name, ALL_QUERIES[name](spark, SF_SMALL), ALL_ORACLES.get(name),
-        duck_small, strict=True,
+        duck_small,
     )
     assert res.ok, str(res)
 
@@ -169,7 +166,7 @@ def test_q11_spec_variant_matches_duckdb(spark, duck_small):
     on the synthetic proxy at every sf (measured in the docstring), so
     the value check runs at fraction=0.005 (98 rows at sf0.001) and a
     second assertion pins the documented emptiness of the spec default."""
-    from ballista_mvp_spark.oracle import compare
+    from ballista_mvp_spark.oracle import compare_strict
     from ballista_mvp_spark.queries.tpch import q11_spec
 
     sql = """
@@ -187,12 +184,11 @@ def test_q11_spec_variant_matches_duckdb(spark, duck_small):
     WHERE vc > (SELECT sum(vc) FROM rev) * 0.005
     ORDER BY part_value DESC, l_partkey
     """
-    res = compare(
+    res = compare_strict(
         "q11_spec",
         q11_spec(spark, SF_SMALL, fraction=0.005),
         sql,
         duck_small,
-        strict=True,
     )
     assert res.ok, str(res)
     # the spec default (0.0001/SF -> 0.1 at sf0.001) is empty on this

@@ -650,7 +650,8 @@ def test_decontaminate_probe_inversion(spark):
     Guards the round-9 fix for a MEASURED static-planner failure: the
     old un-hinted semi join statically broadcast the CORPUS-derived
     distinct-shingle set (whose Catalyst estimate never grows) until
-    the build died at ~67M shingles (tools/decon_scale.py, SCALE.md)."""
+    the build died at ~67M shingles (SCALE.md; rerun with
+    tools/scale_ladder.py text_decontaminate)."""
     from ballista_mvp_spark.queries.pipeline import text_decontaminate
 
     df = text_decontaminate(spark, SF_SMALL)
@@ -687,7 +688,7 @@ def test_shipped_broadcast_policy(spark):
     runtime threshold on — reverting either silently reintroduces the
     measured decon-class failure (static BroadcastHashJoin on an
     explode-derived corpus frame, death at ~67M rows instead of a
-    graceful flip; tools/decon_scale.py)."""
+    graceful flip; tools/scale_ladder.py text_decontaminate)."""
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
     assert (
         spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") == "64m"

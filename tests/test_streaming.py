@@ -25,6 +25,22 @@ def test_tumbling_stream_equals_batch(spark):
     assert batch == stream
 
 
+def test_events_stream_pins_utc_session_zone(spark):
+    """The streaming events source makes the same ts decision as the
+    batch read: on a non-UTC session it pins UTC, or every hour shifts
+    by the zone's offset against the oracle's naive read."""
+    from ballista_mvp_spark.streaming import _events_stream
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        src = _events_stream(spark, SF_SMALL)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert dict(src.dtypes)["ts"] == "timestamp"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
 def test_stateful_sessionize_equals_batch_windows(spark):
     from ballista_mvp_spark.queries.events import events_sessionize
 

@@ -217,7 +217,7 @@ ADJUDICATED_SCALED_PINS: dict[str, str] = {
         "static-planner failure, not an optimization: un-hinted, "
         "Catalyst's never-growing estimate of the CORPUS-derived "
         "shingle set kept BroadcastHashJoin until the build died at "
-        "~67M shingles (tools/decon_scale.py, SCALE.md r9); the "
+        "~67M shingles (tools/scale_ladder.py, SCALE.md r9); the "
         "inverted probe broadcasts the bounded side and removes the "
         "corpus-wide distinct shuffle entirely. The corpus-scaled-eval "
         "form (pipeline_leakage) uses eval_bounded=False: merge-hinted "
@@ -303,7 +303,7 @@ ADJUDICATED_SCALED_PINS["sim_dedup_threshold_sweep"] = _ALL_PAIRS_BASE
 # wide text column divides the row-count estimate while the explode
 # fans out ~10-100x), so the static BroadcastHashJoin survives far past
 # the real threshold and dies building the hashed relation instead of
-# degrading — MEASURED in tools/decon_scale.py (round 9): still
+# degrading — MEASURED by tools/scale_ladder.py (round 9): still
 # broadcasting at 34M distinct shingles, 'Not enough memory to build
 # and broadcast' at ~67M on a 16g driver, zero graceful degradation.
 _PROBE_SIDE = (
@@ -600,7 +600,7 @@ def flags_for(name: str, res: dict) -> tuple[list[str], list[str]]:
         else:
             bad.append(
                 f"static-estimate broadcast of an explode-derived "
-                f"corpus frame (decon-class, see decon_scale.py): {sb}"
+                f"corpus frame (decon-class, see scale_ladder.py): {sb}"
             )
     if res["cartesian"]:
         bad.append("CartesianProduct in executed plan")

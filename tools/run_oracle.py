@@ -1,19 +1,15 @@
 """Local mirror of the driver's t2 correctness gate.
 
-Usage: python tools/run_oracle.py [--strict] [sf_dir] [query-name-prefix ...]
+Usage: python tools/run_oracle.py [--vanilla] [sf_dir] [query-name-prefix ...]
 
 Runs every query in the registry against the DuckDB oracle and prints one
-line per query. Exit code 1 if any oracle-checked query fails.
-
---strict uses the driver-faithful pandas canonicalization
-(oracle.compare_strict): both result sets go through pandas exactly like
-the grading harness, so array/map/Decimal output cells FAIL here instead
-of first failing on the driver (the round-3 red-row class).
+line per query. Exit code 1 if any oracle-checked query fails. The check
+is the driver's pandas canonicalization (oracle.compare_strict), so
+array/map/Decimal output cells FAIL here instead of on the driver.
 
 --vanilla runs under a default-config SparkSession (Spark 4 defaults:
 ANSI mode ON, 200 shuffle partitions, none of build_session's tuning) —
-the exact session the grading driver constructs. Combine with --strict
-for the full driver-conditions sweep.
+the exact session the grading driver constructs.
 """
 
 from __future__ import annotations
@@ -24,27 +20,28 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ballista_mvp_spark.oracle import compare, duckdb_connect
+from ballista_mvp_spark.oracle import compare_strict, duckdb_connect
 from ballista_mvp_spark.queries import ALL_ORACLES, ALL_QUERIES
-from ballista_mvp_spark.session import build_session
+from ballista_mvp_spark.session import build_session, local_cpus
 
 
 def main() -> int:
     argv = list(sys.argv[1:])
-    strict = "--strict" in argv
-    if strict:
-        argv.remove("--strict")
     vanilla = "--vanilla" in argv
     if vanilla:
         argv.remove("--vanilla")
+    unknown = [a for a in argv if a.startswith("--")]
+    if unknown:
+        # a removed or mistyped flag must not be read as the data directory
+        print(f"ERROR: unknown option(s) {unknown}\n{__doc__.splitlines()[2]}")
+        return 2
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     prefixes = argv[1:] or None
     if vanilla:
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{local_cpus()}]")
             .appName("oracle-check-vanilla")
             .getOrCreate()
         )
@@ -59,7 +56,7 @@ def main() -> int:
         ran += 1
         t0 = time.time()
         try:
-            res = compare(name, fn(spark, sf_dir), ALL_ORACLES.get(name), con, strict=strict)
+            res = compare_strict(name, fn(spark, sf_dir), ALL_ORACLES.get(name), con)
         except Exception as e:  # noqa: BLE001
             print(f"[ERR ] {name}: {type(e).__name__}: {str(e)[:300]}")
             failures += 1

@@ -1,10 +1,13 @@
-"""Time every registry query at a given SF — the round-11 optimization
-census (guide §1.1: empirical loop; find where the time actually goes
-across ALL 320 declared queries, not just the 20 bench members).
+"""Time every registry query at a given SF — the registry-wide census of
+where the time goes across all declared queries, not just the 20 bench
+members.
 
-Methodology matches bench.py (collect on a warm session, cold pass =
-plan+codegen+execute, warm pass = steady-state) so numbers are
-comparable with BENCH history. Usage:
+Runs bench.py's timing pass (same timed interval, same warm-up), so the
+numbers are comparable with BENCH history: one cold pass (plan + codegen
++ execute), then --warm-passes warm passes, keeping each query's best.
+`build` is the cold pass's builder-call time per query (driver-side
+DataFrame construction, including any jobs a builder runs eagerly).
+Usage:
 
     python tools/time_all.py [--sf-dir /root/testdata/sf0.1] [--out /tmp/x.json]
         [--only name1,name2] [--warm-passes 1]
@@ -16,12 +19,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ballista_mvp_spark.queries import ALL_QUERIES  # noqa: E402
 from ballista_mvp_spark.session import build_session  # noqa: E402
+from bench import time_pass  # noqa: E402
 
 
 def main() -> None:
@@ -36,31 +39,27 @@ def main() -> None:
     spark = build_session("time-all")
     ALL_QUERIES["count_star"](spark, args.sf_dir).collect()  # JIT warmup
 
-    cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    errs: dict[str, str] = {}
-    for name in names:
-        spark.sparkContext.setJobDescription(f"cold:{name}")
-        t0 = time.perf_counter()
-        try:
-            ALL_QUERIES[name](spark, args.sf_dir).collect()
-            cold[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001 — census must survive one bad query
-            errs[name] = f"{type(e).__name__}: {e}"[:300]
-            continue
-        best = float("inf")
-        for _ in range(args.warm_passes):
-            spark.sparkContext.setJobDescription(f"warm:{name}")
-            t0 = time.perf_counter()
-            ALL_QUERIES[name](spark, args.sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-        warm[name] = round(best, 3)
-        print(f"{name:40s} cold={cold[name]:7.3f} warm={warm[name]:7.3f}", file=sys.stderr)
+    cold_pass = time_pass(spark, args.sf_dir, names)
+    errs = {n: r["error"] for n, r in cold_pass.items() if "error" in r}
+    ok = [n for n in names if n not in errs]
+    best = {n: float("inf") for n in ok}
+    for _ in range(args.warm_passes):
+        for n, r in time_pass(spark, args.sf_dir, ok).items():
+            if "error" in r:
+                errs.setdefault(n, r["error"])
+            else:
+                best[n] = min(best[n], r["wall_s"])
+    cold = {n: round(cold_pass[n]["wall_s"], 3) for n in ok if n not in errs}
+    warm = {n: round(best[n], 3) for n in cold}
+    build = {n: round(cold_pass[n]["build_s"], 3) for n in cold}
+    for n in cold:
+        print(f"{n:40s} cold={cold[n]:7.3f} warm={warm[n]:7.3f} build={build[n]:7.3f}", file=sys.stderr)
 
     out = {
         "sf_dir": args.sf_dir,
         "cold": cold,
         "warm": warm,
+        "build": build,
         "errors": errs,
         "cold_total": round(sum(cold.values()), 3),
         "warm_total": round(sum(warm.values()), 3),
