@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..streaming import STREAMING_PLAN_BUILDERS, drain, drain_batches
 from ..tables import load_table
 from ..types import local_frame
 
@@ -215,9 +216,8 @@ def streaming_tumbling(spark, sf_dir):
     over the events parquet → tumbling window(ts, 1 hour) → complete-mode
     memory sink, drained synchronously. Same aggregation as events_hourly
     → certified against the same batch oracle."""
-    from ..streaming import run_tumbling_batchfile
-
-    return run_tumbling_batchfile(spark, sf_dir)
+    plan = STREAMING_PLAN_BUILDERS["streaming_tumbling"](spark, sf_dir)
+    return drain(spark, plan, "complete").orderBy("hour", "event_type")
 
 
 STREAMING_TUMBLING_ORACLE = """
@@ -234,9 +234,8 @@ def streaming_sliding(spark, sf_dir):
     complete-mode memory sink. Oracle replays the identical expansion in
     SQL: window starts are time_bucket(15 min) − k·15 min for k = 0..3
     (epoch-aligned, exactly Spark's window assignment)."""
-    from ..streaming import run_sliding_batchfile
-
-    return run_sliding_batchfile(spark, sf_dir)
+    plan = STREAMING_PLAN_BUILDERS["streaming_sliding"](spark, sf_dir)
+    return drain(spark, plan, "complete").orderBy("w_start", "event_type")
 
 
 STREAMING_SLIDING_ORACLE = """
@@ -346,9 +345,8 @@ def streaming_dedup(spark, sf_dir):
     through the streaming state store, watermark bounding dedup state.
     The surviving physical row is arrival-order dependent, so the
     certified output is the key set — exact vs a batch SELECT DISTINCT."""
-    from ..streaming import run_stream_dedup_batchfile
-
-    return run_stream_dedup_batchfile(spark, sf_dir)
+    plan = STREAMING_PLAN_BUILDERS["streaming_dedup"](spark, sf_dir)
+    return drain(spark, plan, "append").orderBy("user_id", "event_type", "hour")
 
 
 STREAMING_DEDUP_ORACLE = """
@@ -660,12 +658,19 @@ ORDER BY c.cohort_week, c.k
 def streaming_sessionize(spark, sf_dir):
     """Custom STATEFUL streaming operator: per-user sessionization via
     applyInPandasWithState (GroupState across micro-batches;
-    streaming/stateful_sessionize). Single-batch drain over the events
-    parquet → final state equals the batch sessionization → certified
-    against the same oracle as events_sessionize."""
-    from ..streaming import run_stateful_sessionize_batchfile
-
-    return run_stateful_sessionize_batchfile(spark, sf_dir)
+    streaming/stateful_sessionize). Update mode appends one row per user
+    per micro-batch and n_events strictly grows, so the max-n_events row
+    is the user's final state, which equals the batch sessionization →
+    certified against the same oracle as events_sessionize."""
+    plan = STREAMING_PLAN_BUILDERS["streaming_sessionize"](spark, sf_dir)
+    last = F.max_by(F.struct("n_sessions", "n_events", "max_sess_len"), "n_events")
+    return (
+        drain(spark, plan, "update")
+        .groupBy("user_id")
+        .agg(last.alias("s"))
+        .select("user_id", "s.*")
+        .orderBy("user_id")
+    )
 
 
 def streaming_session_close(spark, sf_dir):
@@ -674,10 +679,8 @@ def streaming_session_close(spark, sf_dir):
     closed by the watermark timing out end+gap (EventTimeTimeout no-data
     batch). Sessions still open at end-of-stream stay in state and are
     NOT emitted; the oracle applies the same closure rule in SQL."""
-    from ..streaming import run_session_close_batchfile
-
-    df = run_session_close_batchfile(spark, sf_dir, 1800)
-    return df.select(
+    plan = STREAMING_PLAN_BUILDERS["streaming_session_close"](spark, sf_dir)
+    return drain(spark, plan, "append").select(
         "user_id",
         F.round("session_start", 6).alias("session_start"),
         F.round("session_end", 6).alias("session_end"),
@@ -927,9 +930,8 @@ def streaming_enrich(spark, sf_dir):
     (broadcast per micro-batch; the stream side never shuffles for the
     join), rolled up by market segment — certified against the identical
     batch SQL."""
-    from ..streaming import run_stream_static_join_batchfile
-
-    return run_stream_static_join_batchfile(spark, sf_dir)
+    plan = STREAMING_PLAN_BUILDERS["streaming_enrich"](spark, sf_dir)
+    return drain(spark, plan, "complete").orderBy("c_mktsegment")
 
 
 STREAMING_ENRICH_ORACLE = """
@@ -943,9 +945,8 @@ def streaming_join(spark, sf_dir):
     """Stream-stream interval self-join (click → purchase by the same
     user within 1 hour) with watermark-bounded join state — certified
     against the batch interval join."""
-    from ..streaming import run_stream_stream_join_batchfile
-
-    return run_stream_stream_join_batchfile(spark, sf_dir)
+    plan = STREAMING_PLAN_BUILDERS["streaming_join"](spark, sf_dir)
+    return drain(spark, plan, "append").orderBy("user_id", "c_id", "p_id")
 
 
 STREAMING_JOIN_ORACLE = """
@@ -1731,9 +1732,9 @@ def streaming_cdc_upsert(spark, sf_dir):
     (user_id % 3), which makes the final state independent of batch
     order: the within-batch max-seq row IS that user's global latest
     change. The oracle states the converged semantics directly —
-    arg-max by event_id per user. Watermark-free availableNow drain;
-    batch-id-stamped commits keep the sink exactly-once under replay
-    (restart/idempotency covered in tests/test_versioned.py)."""
+    arg-max by event_id per user. Watermark-free drain, one file per
+    micro-batch; batch-id-stamped commits keep the sink exactly-once
+    under replay (restart/idempotency covered in tests/test_versioned.py)."""
     import os
     import shutil
     import tempfile
@@ -1752,23 +1753,18 @@ def streaming_cdc_upsert(spark, sf_dir):
             e.filter(F.col("user_id") % 3 == b).coalesce(1).write.parquet(
                 os.path.join(src, f"b{b}")
             )
-        q = (
+        changes = (
             spark.readStream.schema(
                 "event_id bigint, user_id bigint, event_type string, value double"
             )
             .option("maxFilesPerTrigger", "1")
             .parquet(src + "/*")
-            .writeStream.foreachBatch(
-                V.cdc_merge_sink(
-                    tbl, key="user_id", seq_col="event_id",
-                    stats_cols=["user_id"],
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
+        drain_batches(
+            changes,
+            V.cdc_merge_sink(tbl, key="user_id", seq_col="event_id", stats_cols=["user_id"]),
+            ckpt,
+        )
         rows = sorted(
             (r.user_id, r.event_type, float(r.value))
             for r in V.read_versioned(spark, tbl).collect()

@@ -33,6 +33,14 @@ def local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def _driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half the
+    host's physical memory, capped at 16g (a fixed 16g outgrows a small
+    host, where the kernel then kills the JVM mid-run)."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(16 * 1024, half_mib)}m")
+
+
 def build_session(
     app_name: str = "ballista-mvp-spark",
     master: str | None = None,
@@ -78,7 +86,7 @@ def build_session(
         # 2026-08 testdata regen: ts is plain µs NTZ-annotated; read as LTZ so
         # event-time watermarks accept it (values identical under UTC).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         # -XX:-DontCompileHugeMethods stays unset: it triggers C2 compile
         # storms on big generated plans (rejected, OPTIMIZATION_r11.md).
         .config("spark.ui.enabled", "false")

@@ -3,15 +3,20 @@ no streaming constructs at all, SURVEY.md §2.10/§1.1; this is the
 BASELINE.json north-star streaming path).
 
 Patterns covered:
-- tumbling-window aggregation with event-time semantics + watermark
-  (run_tumbling_batchfile: parquet-driven for synchronous certification
-  against the batch oracle; the same plan runs unchanged on kafka/socket
-  sources in production),
-- the memory-sink drain idiom for deterministic testing.
+- event-time window aggregation (tumbling and sliding) with a watermark,
+  stream dedup, stream-static and stream-stream joins, and stateful
+  sessionization; each is an un-started plan in STREAMING_PLAN_BUILDERS
+  that the registry runs over the events parquet through ``drain`` for
+  synchronous certification against the batch oracle (the same plan
+  runs unchanged on kafka/socket sources in production);
+- foreachBatch sinks (partition-overwrite upsert, SCD1 merge, near-dup
+  ingest, sketch rollup), each run to completion through
+  ``drain_batches``.
 
 Scale notes: streaming state is (window, key)-partitioned by Spark's
-state store; watermark bounds state size. Complete-mode memory sink is
-test-only — production sinks are foreachBatch/parquet/kafka.
+state store; watermark bounds state size. The memory sink behind
+``drain`` is for deterministic drains only — production sinks are
+foreachBatch/parquet/kafka.
 """
 
 from __future__ import annotations
@@ -25,14 +30,57 @@ from pyspark.sql import functions as F
 from ..tables import events_frame
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
+_WINDOW = "1 hour"
+_SLIDE = "15 minutes"
+_WATERMARK = "2 hours"
+_SESSION_SCHEMA = "user_id long, n_sessions int, n_events int, max_sess_len int"
 
 
-def tumbling_agg(events: DataFrame, window_len: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Event-time tumbling-window rollup — works on both batch and
-    streaming DataFrames (identical plan declaration)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def drain(spark: SparkSession, plan: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming ``plan`` over everything its source holds now and
+    return what it wrote, as a batch DataFrame.
+
+    The plan runs into a uniquely named memory sink in output ``mode``.
+    Whatever happens, the query is stopped and the sink's temp view
+    dropped, so the session keeps no state from the drain: the returned
+    frame holds the sink through its analyzed plan and stays usable
+    after the drop, and the rows go when it does."""
+    name = f"drain_{uuid.uuid4().hex}"
+    q = plan.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        out = spark.table(name)
+        spark.catalog.dropTempView(name)
+    return out
+
+
+def drain_batches(stream: DataFrame, fn, checkpoint_path: str, mode: str = "append") -> None:
+    """Run ``fn(batch_df, batch_id)`` on every micro-batch of ``stream``
+    until everything its source holds now is processed, then stop the
+    query (also on failure). Restarting with the same
+    ``checkpoint_path`` resumes offsets and state, so a second call
+    processes only what arrived since the first."""
+    q = (
+        stream.writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(fn)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Event-time tumbling-window rollup (1 h windows, 2 h watermark on a
+    stream) — works on both batch and streaming DataFrames (identical
+    plan declaration)."""
+    src = events.withWatermark("ts", _WATERMARK) if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window_len), "event_type")
+        src.groupBy(F.window("ts", _WINDOW), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_v"))
         .select(
             F.date_format(F.col("window.start"), TS_FMT).alias("hour"),
@@ -43,57 +91,14 @@ def tumbling_agg(events: DataFrame, window_len: str = "1 hour", watermark: str =
     )
 
 
-def run_tumbling_batchfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the tumbling agg through the STREAMING engine over the events
-    parquet, drain synchronously into a memory sink, return the final
-    table (complete mode → all windows present, matching the batch
-    oracle)."""
-    # the streaming file source wants a directory: _events_stream points
-    # it at sf_dir with a glob selecting only the events file
-    src = _events_stream(spark, sf_dir)
-    agg = tumbling_agg(src)
-    qname = f"tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("hour", "event_type")
-
-
-def run_sliding_batchfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the sliding-window agg (1 h windows every 15 min — each event
-    lands in 4 overlapping windows) through the STREAMING engine, complete
-    mode → memory sink. The overlapping-window expansion is the one
-    streaming window shape tumbling/session don't exercise."""
-    src = _events_stream(spark, sf_dir)
-    agg = sliding_agg(src)
-    qname = f"sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("w_start", "event_type")
-
-
-def sliding_agg(events: DataFrame, window_len: str = "1 hour", slide: str = "15 minutes") -> DataFrame:
-    """Sliding-window rollup (overlapping windows — each event lands in
-    window_len/slide windows; Spark expands via the same window()
-    expression)."""
-    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Sliding-window rollup: 1 h windows every 15 min, so each event
+    lands in 4 overlapping windows (Spark expands via the same window()
+    expression) — the one streaming window shape tumbling and session
+    windows don't exercise."""
+    src = events.withWatermark("ts", _WATERMARK) if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window_len, slide), "event_type")
+        src.groupBy(F.window("ts", _WINDOW, _SLIDE), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format(F.col("window.start"), TS_FMT).alias("w_start"),
@@ -103,21 +108,20 @@ def sliding_agg(events: DataFrame, window_len: str = "1 hour", slide: str = "15 
     )
 
 
-def stateful_sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    out_schema: str = "user_id long, n_sessions int, n_events int, max_sess_len int",
-):
+def stateful_sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Custom stateful streaming operator: per-user sessionization with
     applyInPandasWithState (GroupState keeps [last_ts, n_sessions,
     n_events, max_len, cur_len] between micro-batches; ProcessingTime
     timeout unused here — state is emitted on every update for
     test-drainability).
 
-    Batch-vs-stream contract: with a single micro-batch and sorted input,
-    emits exactly the events_sessionize batch results — asserted in
-    tests/test_streaming.py. At scale, state is partitioned by user_id in
-    the state store; memory is O(active users), not O(events).
+    Update mode emits one row per user for each micro-batch the user
+    appears in, and n_events strictly grows, so a user's final state is
+    the row with the largest n_events. Batch-vs-stream contract: that
+    final row per user equals the events_sessionize batch results —
+    asserted in tests/test_streaming.py. At scale, state is partitioned
+    by user_id in the state store; memory is O(active users), not
+    O(events).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -160,7 +164,7 @@ def stateful_sessionize(
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=out_schema,
+        outputStructType=_SESSION_SCHEMA,
         stateStructType="last_ts double, n_sessions int, n_events int, max_len int, cur_len int",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -226,10 +230,7 @@ def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_on_close(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-):
+def sessionize_on_close(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Event-time-timeout sessionization: emits one row PER SESSION, when
     the session closes — either because a later event for the same user
     exceeded the inactivity gap (in-batch closure) or because the
@@ -242,6 +243,12 @@ def sessionize_on_close(
     open session per active user, reclaimed on timeout. Timestamps are
     carried as double epoch seconds (timezone-proof across the Arrow
     boundary).
+
+    Drained over a finite input, the 0-second watermark sits at max(ts)
+    after the data batch, so the trailing no-data batch times out every
+    open session whose last event is at least ``gap_seconds`` before the
+    end; sessions still inside the gap stay open and are not emitted
+    (asserted against a batch recomputation in tests/test_streaming.py).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -272,11 +279,7 @@ def sessionize_on_close(
                 if last is not None and new_session.iloc[0]:
                     # the chunk's first event proves the CARRIED session
                     # closed (gap exceeded): emit it here — the timeout
-                    # path only covers users with NO new data, so
-                    # skipping this dropped cross-batch sessions
-                    # whenever the same user spoke again in a later
-                    # batch (found by the split-invariance model test,
-                    # tests/test_streaming_model.py)
+                    # path only fires for users with NO new data
                     closed.append((start, last, n))
                 sid = new_session.cumsum()  # 0 ⇒ continues the carried session
                 g = ts.groupby(sid)
@@ -316,78 +319,20 @@ def sessionize_on_close(
     )
 
 
-def run_session_close_batchfile(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 1800
-) -> DataFrame:
-    """Drive emit-on-close sessionization over the events parquet. With a
-    0-second watermark, after the data batch the watermark sits at
-    max(ts), so the trailing no-data batch times out every open session
-    whose last event is at least ``gap`` before stream end; sessions still
-    inside the gap at end-of-stream remain open (exactly the streaming
-    semantics — asserted against a batch recomputation in
-    tests/test_streaming.py)."""
-    src = _events_stream(spark, sf_dir)
-    out = sessionize_on_close(src.select("user_id", "ts", "event_id"), gap_seconds)
-    qname = f"sessclose_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("user_id", "session_start")
-
-
-def run_stateful_sessionize_batchfile(spark: SparkSession, sf_dir: str, gap_seconds: int = 1800) -> DataFrame:
-    """Drive stateful sessionization through the streaming engine over the
-    events parquet (single micro-batch → final state per user == batch
-    sessionization), drain to memory sink, return the table."""
-    src = _events_stream(spark, sf_dir)
-    out = stateful_sessionize(src.select("user_id", "ts", "event_id"), gap_seconds)
-    qname = f"sess_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # update mode appends one row per (user, micro-batch); keep the last
-    final = spark.table(qname)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.monotonically_increasing_id().desc())
-    return (
-        final.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy("user_id")
-    )
-
-
-def run_stream_dedup_batchfile(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: first event per (user, event_type, hour)
-    via dropDuplicates over the STREAMING engine with a watermark bounding
-    the dedup state (keys older than the watermark are evicted — without
-    it, stream-dedup state grows forever).
+    via dropDuplicates, with a watermark bounding the dedup state (keys
+    older than the watermark are evicted — without it, stream-dedup
+    state grows forever).
 
     Which PHYSICAL row survives per key depends on arrival order (non-
-    deterministic across partitioned replay), so the certified output is
-    the KEY SET itself — exactly `SELECT DISTINCT user_id, event_type,
-    hour` in the batch oracle, while the execution path exercised is the
-    streaming state store."""
-    keyed = stream_dedup_plan(spark, sf_dir)
-    qname = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = keyed.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("user_id", "event_type", "hour")
-
-
-def stream_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-started streaming dedup plan (see run_stream_dedup_batchfile)."""
+    deterministic across partitioned replay), so the plan keeps only the
+    KEY SET — exactly `SELECT DISTINCT user_id, event_type, hour` in the
+    batch oracle, while the execution path is the streaming state
+    store. Drain in append mode."""
     src = _events_stream(spark, sf_dir)
     return (
-        src.withWatermark("ts", "2 hours")
+        src.withWatermark("ts", _WATERMARK)
         .withColumn("hour", F.date_format(F.date_trunc("hour", "ts"), TS_FMT))
         .dropDuplicates(["user_id", "event_type", "hour"])
         .select("user_id", "event_type", "hour")
@@ -448,23 +393,15 @@ def run_incremental_sink(
             .parquet(out_path)
         )
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_batches(agg, upsert, checkpoint_path, "update")
 
 
 def scd1_stream_plan(
     spark: SparkSession, sf_dir: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Un-started streaming side of the SCD1 upsert (the keyed merge
-    happens in foreachBatch, where AQE applies — see run_scd1_upsert_stream)."""
+    happens in foreachBatch, where AQE applies — see run_scd1_upsert_stream).
+    ``source`` overrides the default events stream."""
     ev = source if source is not None else _events_stream(spark, sf_dir)
     return ev.select("user_id", "ts", "event_id", "event_type", "value")
 
@@ -488,8 +425,6 @@ def run_scd1_upsert_stream(
     test. Per-batch cost: one window over the batch + one
     target-sized merge (with a partition_col this becomes the
     touched-partition discipline of sources.merge_upsert)."""
-    import os as _os
-
     from pyspark.sql import Window as W
 
     slim = scd1_stream_plan(spark, sf_dir, source)
@@ -503,7 +438,7 @@ def run_scd1_upsert_stream(
             .filter(F.col("_r") == 1)
             .drop("_r")
         )
-        if _os.path.exists(out_path):
+        if os.path.exists(out_path):
             latest = spark.read.parquet(out_path).unionByName(latest)
             latest = (
                 latest.withColumn("_r", F.row_number().over(w))
@@ -513,45 +448,24 @@ def run_scd1_upsert_stream(
         merged = latest.localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(out_path)
 
-    q = (
-        slim.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def run_stream_static_join_batchfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment join: the event stream joins a static
-    dimension (customer), EXPLICITLY broadcast, so the stream side never
-    shuffles for the join. The pin is the stream-static contract, not an
-    optimization: streaming plans get no AQE, and under the shipped
-    broadcast policy (static threshold off — SCALE.md r9) an un-hinted
-    stream-static join would plan SortMergeJoin and shuffle every
-    micro-batch of the stream. The enrichment dimension must therefore
-    fit in executor memory BY CONTRACT (the standard stream-static
-    pattern); for a dimension too large to broadcast, enrich in
-    foreachBatch (where AQE applies) or pre-bucket both sides. Rollup by
-    segment in complete mode for a deterministic drain."""
-    agg = stream_static_join_plan(spark, sf_dir)
-    qname = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("c_mktsegment")
+    drain_batches(slim, upsert, checkpoint_path)
 
 
 def stream_static_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-started stream-static enrichment plan (see
-    run_stream_static_join_batchfile for the contract docstring). The
-    F.broadcast pin on the dimension is MANDATORY here — tools/
-    stream_plan_audit.py flags any stream-static join without it."""
+    """Stream-static enrichment: the event stream joins a static
+    dimension (customer), EXPLICITLY broadcast, so the stream side never
+    shuffles for the join; rolled up by segment for a complete-mode
+    drain.
+
+    The pin is the stream-static contract, not an optimization:
+    streaming plans get no AQE, and under the shipped broadcast policy
+    (static threshold off — SCALE.md "Broadcast policy") an un-hinted
+    stream-static join would plan SortMergeJoin and shuffle every
+    micro-batch of the stream; tools/stream_plan_audit.py flags any
+    stream-static join without it. The enrichment dimension must
+    therefore fit in executor memory BY CONTRACT; for a dimension too
+    large to broadcast, enrich in foreachBatch (where AQE applies) or
+    pre-bucket both sides."""
     src = _events_stream(spark, sf_dir)
     cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         "c_custkey", "c_mktsegment"
@@ -566,79 +480,18 @@ def stream_static_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stream_join_plan(
     spark: SparkSession, sf_dir: str, source: DataFrame | None = None
 ) -> DataFrame:
-    """Un-started stream-stream interval join plan (see
-    run_stream_stream_join_batchfile). ``source`` overrides the default
-    events file-stream — used by the split-invariance model suite to
-    replay the same plan over randomized micro-batch cuts."""
-    src = source if source is not None else _events_stream(spark, sf_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("c_id"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_id"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("user_id", "c_id", "p_id")
-
-
-def run_stream_stream_join_batchfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval self-join: click followed by a purchase by
     the same user within 1 hour. Both sides carry watermarks and the join
     condition bounds event-time distance, so join state is evicted once
     the watermark passes c_ts + 1h — bounded state, the stream-stream
     contract. Inner-join matches emit as soon as both sides arrive (no
-    watermark hold on output)."""
-    j = stream_stream_join_plan(spark, sf_dir)
-    qname = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    q = j.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname).orderBy("user_id", "c_id", "p_id")
+    watermark hold on output); drain in append mode. ``source``
+    overrides the default events stream."""
+    return _click_purchase_join(spark, sf_dir, source, "inner", "user_id", "c_id", "p_id")
 
 
-def stream_stream_left_join_plan(source: DataFrame) -> DataFrame:
-    """Un-started stream-stream LEFT OUTER interval join plan (see
-    run_stream_stream_left_join)."""
-    clicks = (
-        source.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("c_id"))
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        source.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_id"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select("user_id", "c_id", "c_ts", "p_id")
-
-
-def run_stream_stream_left_join(
-    spark: SparkSession,
-    source: DataFrame,
+def stream_stream_left_join_plan(
+    spark: SparkSession, sf_dir: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click, with its
     within-1h purchase when one exists — and a NULL-extended row when
@@ -647,18 +500,40 @@ def run_stream_stream_left_join(
     passes its join window's upper bound (c_ts + 1h), then flushes with
     nulls (Spark's no-data micro-batches drive the final evictions).
     Rows younger than the final watermark stay in state forever on a
-    finite input — the test accounts for exactly that boundary; on an
-    unbounded stream the watermark keeps advancing and every click
-    eventually resolves. Same bounded-state contract as the inner join,
-    plus the eviction-driven emission discipline."""
-    j = stream_stream_left_join_plan(source)
-    qname = f"ssljoin_{uuid.uuid4().hex[:8]}"
-    q = j.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(qname)
+    finite input; on an unbounded stream the watermark keeps advancing
+    and every click eventually resolves. Same bounded-state contract as
+    the inner join; drain in append mode."""
+    return _click_purchase_join(spark, sf_dir, source, "left_outer", "user_id", "c_id", "c_ts", "p_id")
+
+
+def _click_purchase_join(spark, sf_dir, source, how: str, *cols: str) -> DataFrame:
+    src = source if source is not None else _events_stream(spark, sf_dir)
+    clicks = (
+        src.filter(F.col("event_type") == "click")
+        .select("user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("c_id"))
+        .withWatermark("c_ts", _WATERMARK)
+    )
+    purchases = (
+        src.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+            F.col("event_id").alias("p_id"),
+        )
+        .withWatermark("p_ts", _WATERMARK)
+    )
+    return clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    ).select(*cols)
+
+
+def _docs_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
+    """Streaming source over the JSON documents (doc_id, text) in docs_dir."""
+    return spark.readStream.schema("doc_id long, text string").json(docs_dir)
 
 
 def run_neardedup_ingest(
@@ -688,15 +563,7 @@ def run_neardedup_ingest(
     run_incremental_sink.
     """
     from ..operators import dedup as D
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = spark.readStream.schema(schema).json(docs_dir)
     rows_per_band = num_hashes // bands
 
     def _shingle_bands(df: DataFrame):
@@ -752,10 +619,8 @@ def run_neardedup_ingest(
         batch = batch.join(dup_b, "doc_id", "left_anti")
         hs, bands_df = _shingle_bands(batch)
         # (2) probe the materialized corpus index (absent on first batch)
-        import os as _os
-
-        if _os.path.isdir(index_path) and any(
-            n.startswith("_batch=") for n in _os.listdir(index_path)
+        if os.path.isdir(index_path) and any(
+            n.startswith("_batch=") for n in os.listdir(index_path)
         ):
             idx = spark.read.parquet(index_path)
             cand = (
@@ -817,15 +682,7 @@ def run_neardedup_ingest(
         # cache in executor storage forever
         hs.unpersist()
 
-    q = (
-        src.writeStream.option("checkpointLocation", checkpoint_path)
-        .foreachBatch(ingest)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_batches(_docs_stream(spark, docs_dir), ingest, checkpoint_path)
 
 
 def run_cms_rollup(
@@ -848,15 +705,7 @@ def run_cms_rollup(
     dynamic-partition trick as run_incremental_sink."""
     from ..operators import dedup as D
     from ..operators import sketch as SK
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = spark.readStream.schema(schema).json(docs_dir)
 
     def roll(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(F.explode(D.tokens(F.col("text"))).alias("term"))
@@ -869,15 +718,7 @@ def run_cms_rollup(
             .parquet(sketch_path)
         )
 
-    q = (
-        src.writeStream.option("checkpointLocation", checkpoint_path)
-        .foreachBatch(roll)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_batches(_docs_stream(spark, docs_dir), roll, checkpoint_path)
 
 
 def read_cms(spark: SparkSession, sketch_path: str) -> DataFrame:
@@ -892,22 +733,23 @@ def read_cms(spark: SparkSession, sketch_path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming-plan hygiene registry (VERDICT r9 #2)
+# Streaming-plan hygiene registry
 #
 # Streaming micro-batch plans get NO AQE, so every stream-static join MUST
 # carry an explicit F.broadcast pin on its static side — under the shipped
-# broadcast policy (static autoBroadcastJoinThreshold=-1, SCALE.md r9
+# broadcast policy (static autoBroadcastJoinThreshold=-1, SCALE.md
 # "Broadcast policy") an un-hinted stream-static join plans SortMergeJoin
 # and shuffles the stream on every micro-batch. The pin IS the contract
 # (the reference re-selects join strategy at stage-resolution time,
 # execution_stage.rs:246-253 — streaming plans have no such hook).
 #
-# Every entry returns the UN-STARTED streaming DataFrame that the runner
-# hands to writeStream — the audited plan is the executed plan by
-# construction (the runners call these same builders).
-# tools/stream_plan_audit.py compiles each analyzed plan and FAILS on any
-# stream-static join without a broadcast hint; tests/test_stream_plan_audit.py
-# runs the same sweep in the battery.
+# Every entry returns an UN-STARTED streaming DataFrame. The streaming_*
+# registry queries (queries/events.py) drain exactly
+# STREAMING_PLAN_BUILDERS[name], and run_scd1_upsert_stream hands
+# scd1_stream_plan to drain_batches, so the audited plan is the executed
+# plan. tools/stream_plan_audit.py compiles each analyzed plan and FAILS
+# on any stream-static join without a broadcast hint;
+# tests/test_stream_plan_audit.py runs the same sweep in the battery.
 #
 # Exclusions (documented, not audited): run_incremental_sink reuses the
 # streaming_tumbling plan verbatim; run_neardedup_ingest / run_cms_rollup /
@@ -924,9 +766,7 @@ STREAMING_PLAN_BUILDERS = {
     "streaming_dedup": stream_dedup_plan,
     "streaming_enrich": stream_static_join_plan,
     "streaming_join": stream_stream_join_plan,
-    "streaming_left_join": lambda spark, sf_dir: stream_stream_left_join_plan(
-        _events_stream(spark, sf_dir)
-    ),
+    "streaming_left_join": stream_stream_left_join_plan,
     "streaming_sessionize": lambda spark, sf_dir: stateful_sessionize(
         _events_stream(spark, sf_dir).select("user_id", "ts", "event_id")
     ),

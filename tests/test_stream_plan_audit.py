@@ -5,7 +5,7 @@ by hand (the db0810e fix): streaming micro-batch plans get no AQE, so
 under the shipped broadcast policy (static threshold off) any
 stream-static join without an explicit broadcast pin SortMergeJoins —
 shuffling the stream every micro-batch. The sweep here compiles the SAME
-un-started plans the runners execute (STREAMING_PLAN_BUILDERS) and must
+un-started plans the registry drains (STREAMING_PLAN_BUILDERS) and must
 stay at zero findings; the negative controls prove the auditor actually
 fires when the pin is removed.
 """

@@ -7,12 +7,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ballista_mvp_spark.streaming import (
-    run_stateful_sessionize_batchfile,
-    run_tumbling_batchfile,
-    sliding_agg,
-    tumbling_agg,
+from ballista_mvp_spark.queries import ALL_QUERIES
+from ballista_mvp_spark.queries.events import (
+    streaming_session_close,
+    streaming_sessionize,
+    streaming_tumbling,
 )
+from ballista_mvp_spark.streaming import _events_stream, drain, sliding_agg, tumbling_agg
 from ballista_mvp_spark.tables import load_table
 
 from .conftest import SF_SMALL
@@ -21,16 +22,36 @@ from .conftest import SF_SMALL
 def test_tumbling_stream_equals_batch(spark):
     ev = load_table(spark, SF_SMALL, "events")
     batch = {tuple(r) for r in tumbling_agg(ev).collect()}
-    stream = {tuple(r) for r in run_tumbling_batchfile(spark, SF_SMALL).collect()}
+    stream = {tuple(r) for r in streaming_tumbling(spark, SF_SMALL).collect()}
     assert batch == stream
+
+
+def test_streaming_queries_leave_no_session_state(spark):
+    """A long-lived session keeps nothing from a streaming registry
+    query: every drain stops its query and drops its sink's temp view
+    (which would otherwise hold the sink's rows in driver memory), also
+    when the plan fails, and the returned frame stays collectable after
+    the drop."""
+
+    def state():
+        temp = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return temp, {q.id for q in spark.streams.active}
+
+    before = state()
+    for name in sorted(n for n in ALL_QUERIES if n.startswith("streaming_")):
+        assert ALL_QUERIES[name](spark, SF_SMALL).collect(), name
+        assert state() == before, name
+    # a failing plan is stopped and its view dropped too
+    failing = _events_stream(spark, SF_SMALL).select(F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        drain(spark, failing, "append")
+    assert state() == before
 
 
 def test_events_stream_pins_utc_session_zone(spark):
     """The streaming events source makes the same ts decision as the
     batch read: on a non-UTC session it pins UTC, or every hour shifts
     by the zone's offset against the oracle's naive read."""
-    from ballista_mvp_spark.streaming import _events_stream
-
     zone = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -50,15 +71,15 @@ def test_stateful_sessionize_equals_batch_windows(spark):
     }
     stream = {
         (r.user_id, r.n_sessions, r.n_events, r.max_sess_len)
-        for r in run_stateful_sessionize_batchfile(spark, SF_SMALL).collect()
+        for r in streaming_sessionize(spark, SF_SMALL).collect()
     }
     assert batch == stream
 
 
 def test_sliding_windows_overlap(spark):
     ev = load_table(spark, SF_SMALL, "events")
-    tumbling = tumbling_agg(ev, "1 hour").agg(F.sum("n").alias("s")).head().s
-    sliding = sliding_agg(ev, "1 hour", "15 minutes").agg(F.sum("n").alias("s")).head().s
+    tumbling = tumbling_agg(ev).agg(F.sum("n").alias("s")).head().s
+    sliding = sliding_agg(ev).agg(F.sum("n").alias("s")).head().s
     # each event falls in exactly 4 overlapping 1h/15min windows
     assert sliding == 4 * tumbling
 
@@ -69,9 +90,7 @@ def test_session_emit_on_close_equals_batch(spark):
     timed out because end-of-stream watermark passed end+gap)."""
     from pyspark.sql import Window as W
 
-    from ballista_mvp_spark.streaming import run_session_close_batchfile
-
-    gap = 1800
+    gap = 1800  # the registry query's gap
     ev = (
         load_table(spark, SF_SMALL, "events")
         .select("user_id", F.col("ts").cast("double").alias("t"), "event_id")
@@ -95,7 +114,7 @@ def test_session_emit_on_close_equals_batch(spark):
     }
     got = {
         (r.user_id, round(r.session_start, 6), round(r.session_end, 6), r.n_events)
-        for r in run_session_close_batchfile(spark, SF_SMALL, gap).collect()
+        for r in streaming_session_close(spark, SF_SMALL).collect()
     }
     assert got == expected and len(got) > 0
 
@@ -418,7 +437,7 @@ def test_stream_stream_left_outer_join_emits_evicted_nulls(spark, tmp_path):
     the point of the test)."""
     from pyspark.sql import Window as W
 
-    from ballista_mvp_spark.streaming import run_stream_stream_left_join
+    from ballista_mvp_spark.streaming import stream_stream_left_join_plan
 
     ev = load_table(spark, SF_SMALL, "events")
     chunks = ev.withColumn("_c", F.ntile(2).over(W.orderBy("ts", "event_id")))
@@ -436,7 +455,7 @@ def test_stream_stream_left_outer_join_emits_evicted_nulls(spark, tmp_path):
     schema = ev.schema
     source = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(src_dir))
 
-    out = run_stream_stream_left_join(spark, source).collect()
+    out = drain(spark, stream_stream_left_join_plan(spark, SF_SMALL, source), "append").collect()
 
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("c_id")
@@ -488,7 +507,6 @@ def test_trigger_available_now_drains_and_stops(spark, tmp_path):
     babysitter), and the result equals the batch rollup. A second run
     with the same checkpoint sees no new data and adds nothing."""
     from ballista_mvp_spark.queries.events import events_hourly
-    from ballista_mvp_spark.streaming import _events_stream, tumbling_agg
 
     agg = tumbling_agg(_events_stream(spark, SF_SMALL))
     import uuid as _uuid
@@ -550,13 +568,11 @@ def test_rocksdb_state_store_matches_default_and_survives_restart(
     from pyspark.sql import Window as W
 
     prev = spark.conf.get(_PROVIDER_CONF)
-    base = {tuple(r) for r in run_tumbling_batchfile(spark, SF_SMALL).collect()}
+    base = {tuple(r) for r in streaming_tumbling(spark, SF_SMALL).collect()}
     spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
     try:
         # (1) provider swap is result-invariant
-        rocks = {
-            tuple(r) for r in run_tumbling_batchfile(spark, SF_SMALL).collect()
-        }
+        rocks = {tuple(r) for r in streaming_tumbling(spark, SF_SMALL).collect()}
         assert rocks == base
 
         # (2) stop/restart across one checkpoint, RocksDB state resumed.

@@ -33,7 +33,6 @@ Contracts under test:
 from __future__ import annotations
 
 import os
-import uuid
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -41,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ballista_mvp_spark.sources import versioned as V
 from ballista_mvp_spark.streaming import (
+    drain,
     run_scd1_upsert_stream,
     sessionize_on_close,
     stateful_sessionize,
@@ -213,15 +213,9 @@ def test_session_close_matches_model_under_in_order_splits(
     out = sessionize_on_close(
         _file_stream(spark, src).select("user_id", "ts", "event_id"), GAP
     )
-    qname = f"sessmodel_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table(qname).collect()
+        for r in drain(spark, out, "append").collect()
     }
     assert got == _model_closed_sessions(), (cuts, got)
 
@@ -339,15 +333,9 @@ def test_session_close_cross_batch_regression(spark, tmp_path_factory):
     out = sessionize_on_close(
         _file_stream(spark, src).select("user_id", "ts", "event_id"), GAP
     )
-    qname = f"sessreg_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table(qname).collect()
+        for r in drain(spark, out, "append").collect()
     }
     # batch-0 session closed by batch 1's first event; batch 1's own
     # first session closed by its second event; the last stays open
@@ -402,21 +390,10 @@ def test_session_close_real_data_split_invariance(spark, tmp_path_factory):
             .parquet(src)
         )
         out = sessionize_on_close(stream, 1800)
-        qname = f"sessreal_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         results.append(
             {
                 (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-                for r in spark.table(qname).collect()
+                for r in drain(spark, out, "append").collect()
             }
         )
     assert results[0] == results[1], (
@@ -505,24 +482,13 @@ def test_stateful_sessionize_matches_model_under_in_order_splits(
     out = stateful_sessionize(
         _file_stream(spark, src).select("user_id", "ts", "event_id"), GAP
     )
-    qname = f"sessupd_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.monotonically_increasing_id().desc())
-    final = (
-        spark.table(qname)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-    )
-    got = {
-        r["user_id"]: (r["n_sessions"], r["n_events"], r["max_sess_len"])
-        for r in final.collect()
-    }
+    # update mode emits one row per (user, micro-batch) and n_events
+    # strictly grows: the max-n_events row is the user's final state
+    got: dict[int, tuple[int, int, int]] = {}
+    for r in drain(spark, out, "update").collect():
+        cur = (r["n_sessions"], r["n_events"], r["max_sess_len"])
+        if r["user_id"] not in got or cur[1] > got[r["user_id"]][1]:
+            got[r["user_id"]] = cur
     assert got == _model_session_totals(), (cuts, got)
 
 
@@ -591,15 +557,9 @@ def test_stream_stream_inner_join_matches_model_under_in_order_splits(
     src = os.path.join(base, "src")
     _write_chunks(spark, src, _chunks(cuts, _JPOOL))
     j = stream_stream_join_plan(spark, "unused", source=_file_stream(spark, src))
-    qname = f"ssjm_{uuid.uuid4().hex[:8]}"
-    q = j.writeStream.outputMode("append").format("memory").queryName(qname).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], r["c_id"], r["p_id"])
-        for r in spark.table(qname).collect()
+        for r in drain(spark, j, "append").collect()
     }
     assert got == _model_inner_join(), (cuts, got)
 
@@ -620,14 +580,13 @@ def test_stream_stream_left_join_matches_model_under_in_order_splits(
     for a matched click or a click the watermark cannot yet have passed.
     The 1s brackets absorb Spark's whole-second watermark truncation
     (same guard as tests/test_streaming.py's fixed-split test)."""
-    from ballista_mvp_spark.streaming import run_stream_stream_left_join
+    from ballista_mvp_spark.streaming import stream_stream_left_join_plan
 
     base = str(tmp_path_factory.mktemp("ssljm"))
     src = os.path.join(base, "src")
     _write_chunks(spark, src, _chunks(cuts, _JPOOL))
-    out = run_stream_stream_left_join(
-        spark, _file_stream(spark, src)
-    ).collect()
+    j = stream_stream_left_join_plan(spark, "unused", source=_file_stream(spark, src))
+    out = drain(spark, j, "append").collect()
 
     inner = _model_inner_join()
     got_inner = {
@@ -672,20 +631,9 @@ def test_sliding_agg_matches_batch_under_any_split(
     src = os.path.join(base, "src")
     _write_chunks(spark, src, _chunks(cuts))
     agg = sliding_agg(_file_stream(spark, src))
-    qname = f"slidem_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["w_start"], r["event_type"], r["n"])
-        for r in spark.table(qname).collect()
+        for r in drain(spark, agg, "complete").collect()
     }
     batch = spark.read.schema(_SCHEMA).parquet(src)
     expected = {

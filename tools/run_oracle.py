@@ -3,7 +3,9 @@
 Usage: python tools/run_oracle.py [--vanilla] [sf_dir] [query-name-prefix ...]
 
 Runs every query in the registry against the DuckDB oracle and prints one
-line per query. Exit code 1 if any oracle-checked query fails. The check
+line per query. Exit code 1 if any oracle-checked query fails, or at
+once if the Spark session is lost (its JVM died: every later query
+would only fail to connect). The check
 is the driver's pandas canonicalization (oracle.compare_strict), so
 array/map/Decimal output cells FAIL here instead of on the driver.
 
@@ -19,6 +21,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from py4j.protocol import Py4JNetworkError
 
 from ballista_mvp_spark.oracle import compare_strict, duckdb_connect
 from ballista_mvp_spark.queries import ALL_ORACLES, ALL_QUERIES
@@ -57,6 +61,10 @@ def main() -> int:
         t0 = time.time()
         try:
             res = compare_strict(name, fn(spark, sf_dir), ALL_ORACLES.get(name), con)
+        except (ConnectionRefusedError, Py4JNetworkError) as e:
+            print(f"\nERROR: Spark session lost after {ran - 1} queries "
+                  f"({name}: {type(e).__name__}: {str(e)[:200]})")
+            return 1
         except Exception as e:  # noqa: BLE001
             print(f"[ERR ] {name}: {type(e).__name__}: {str(e)[:300]}")
             failures += 1

@@ -8,8 +8,9 @@ plans SortMergeJoin and SHUFFLES THE STREAM on every micro-batch: the
 exact regression round 9's reactive db0810e fix closed by hand. This
 audit mechanizes that contract: it compiles the ANALYZED logical plan of
 every un-started streaming DataFrame the engine ships
-(ballista_mvp_spark.streaming.STREAMING_PLAN_BUILDERS — the same
-builders the runners execute, so the audited plan IS the executed plan)
+(ballista_mvp_spark.streaming.STREAMING_PLAN_BUILDERS — the plans the
+streaming_* registry queries drain, so the audited plan IS the executed
+plan)
 and FAILS on any join with exactly one streaming side whose static side
 carries no broadcast hint.
 
