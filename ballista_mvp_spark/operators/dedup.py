@@ -91,34 +91,60 @@ def shingles(col: Column, k: int = 3, max_tokens: int | None = None) -> Column:
     )
 
 
-def token_hashes(col: Column, max_tokens: int | None = None) -> Column:
-    """xxhash64 per whitespace token — the one string-hash pass every
-    hashed-shingle operator builds on."""
-    return F.transform(tokens(col, max_tokens), lambda t: F.xxhash64(t))
+# Java's \s charset: the tokenizer trims exactly these before splitting
+_WS = " \t\n\x0b\f\r"
 
 
-def hashed_shingles(th: Column, k: int) -> Column:
-    """Distinct word-k-gram shingle KEYS from a token-hash array: shingle
-    key = xxhash64 of k consecutive token hashes. No k-gram string is ever
-    materialized (vs hashing shingles(): saves the concat_ws allocation of
-    ~len(doc) k-word strings per row — the dominant cost of every shingle
-    pipeline). Set semantics are hash-invariant vs string shingles up to
-    2^-64 collisions, so DuckDB string-shingle oracles still certify
-    counts/Jaccard built on these keys.
+def _tokens_sql(name: str, max_tokens: int | None = None) -> str:
+    """`tokens(F.col(name), max_tokens)` as SQL text."""
+    t = f"split(btrim(lower({name}), '{_WS}'), '\\\\s+')"
+    return t if max_tokens is None else f"slice({t}, 1, {max_tokens})"
 
-    `th` MUST be a materialized column (write token_hashes() through a
-    select first): Catalyst does not CSE a subexpression repeated inside
-    higher-order functions, and this expression references `th` k times
-    per element. Out-of-range F.get (the short-document fallback gram)
-    yields null, which xxhash64 skips — deterministic."""
+
+def _token_hashes_sql(col: str, max_tokens: int | None = None) -> str:
+    return f"transform({_tokens_sql(col, max_tokens)}, t -> xxhash64(t))"
+
+
+def token_hashes(col: str, max_tokens: int | None = None) -> Column:
+    """xxhash64 per whitespace token of column `col` — the one
+    string-hash pass every hashed-shingle operator builds on."""
+    return F.expr(_token_hashes_sql(col, max_tokens))
+
+
+def _hashed_shingles_sql(th: str, k: int) -> str:
+    """Distinct word-k-gram shingle KEYS from the token-hash array column
+    `th`: shingle key = xxhash64 of k consecutive token hashes. No k-gram
+    string is ever materialized (vs hashing shingles(): saves the
+    concat_ws allocation of ~len(doc) k-word strings per row — the
+    dominant cost of every shingle pipeline). Set semantics are
+    hash-invariant vs string shingles up to 2^-64 collisions, so DuckDB
+    string-shingle oracles still certify counts/Jaccard built on these
+    keys.
+
+    `th` MUST be a materialized column (written through a select first):
+    Catalyst does not CSE a subexpression repeated inside higher-order
+    functions, and this expression references `th` k times per element.
+    Out-of-range `get` (the short-document fallback gram) yields null,
+    which xxhash64 skips — deterministic."""
     if k == 1:
-        return F.array_distinct(th)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(th) - (k - 1), F.lit(1))),
-            lambda i: F.xxhash64(*[F.get(th, i - 1 + j) for j in range(k)]),
-        )
+        return f"array_distinct({th})"
+    gram = ", ".join(f"get({th}, i - 1 + {j})" for j in range(k))
+    return (
+        f"array_distinct(transform(sequence(1, greatest(size({th}) - {k - 1}, 1)), "
+        f"i -> xxhash64({gram})))"
     )
+
+
+def hashed_shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, max_tokens: int | None = None
+) -> DataFrame:
+    """(_id, _hs): each document's distinct hashed word-k-gram shingle
+    keys, in two projections (token hashes, then shingle keys; see
+    `_hashed_shingles_sql`). Not persisted: callers that read it twice
+    persist it."""
+    return df.selectExpr(
+        f"{id_col} AS _id", f"{_token_hashes_sql(text_col, max_tokens)} AS _th"
+    ).selectExpr("_id", f"{_hashed_shingles_sql('_th', shingle_k)} AS _hs")
 
 
 def exact_dedup(df: DataFrame, key: Column, id_col: str) -> DataFrame:
@@ -167,23 +193,53 @@ def incremental_dedup(
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 32, shingle_k: int = 3) -> Column:
-    """MinHash signature as an array<long>: sig[j] = min over shingles of
-    xxhash64(j, base_hash(shingle)). The expensive string hash runs ONCE
-    per shingle; the per-slot variants rehash the resulting 8-byte long —
-    ~10× cheaper than hashing the string num_hashes times. Entirely
-    JVM-side; no shuffle."""
-    base = F.transform(shingles(text, shingle_k), lambda s: F.xxhash64(s))
-    # NOTE: the per-slot lambda must take exactly ONE parameter. A
-    # two-parameter lambda (e.g. `lambda h, j=j: ...`) is treated by
-    # F.transform as an (element, index) function, silently binding the
-    # second name to the ARRAY INDEX and collapsing every slot to the
-    # same hash function; the outer lambda-indexed transform is the
-    # correct (and smaller-codegen) shape.
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.array_min(F.transform(base, lambda h: F.xxhash64(j, h))),
+def _signature_sql(num_hashes: int) -> str:
+    """MinHash signature of the `_hs` shingle-key column as an
+    array<long>: sig[j] = min over shingles of xxhash64(j, key). One
+    lambda-indexed transform instead of num_hashes unrolled
+    array_min(transform(...)) expressions: the values are identical but
+    the expression tree is ~16× smaller, which cuts Catalyst and codegen
+    compile time — the dominant cold-run cost of the operator. The outer
+    lambda takes exactly ONE parameter: a second one would bind the
+    array index, not the slot."""
+    return f"transform(sequence(0, {num_hashes - 1}), j -> array_min(transform(_hs, h -> xxhash64(j, h))))"
+
+
+def _bands_sql(num_hashes: int, bands: int) -> str:
+    """One (band, bh) struct per band of the `_sig` column, exploded: bh
+    is xxhash64 of the band's rows_per_band signature slots."""
+    r = num_hashes // bands
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"element_at(_sig, {b * r + i + 1})" for i in range(r))
+        + ") AS bh)"
+        for b in range(bands)
     )
+    return f"explode(array({structs}))"
+
+
+def minhash_bands(hs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, band, bh) banded MinHash rows of a `hashed_shingle_sets`
+    frame: signature (narrow) → explode bands (×bands rows). The slim
+    table is all that enters the band shuffle; shingle arrays never do."""
+    return (
+        hs.selectExpr("_id", f"{_signature_sql(num_hashes)} AS _sig")
+        .selectExpr("_id", f"{_bands_sql(num_hashes, bands)} AS _b")
+        .selectExpr("_id", "_b.band AS band", "_b.bh AS bh")
+    )
+
+
+# every (a, b) with a < b of a bucket's sorted `_ids`, as one array
+_BUCKET_PAIRS_SQL = (
+    "flatten(transform(sequence(1, size(_ids) - 1), "
+    "i -> transform(slice(_ids, i + 1, size(_ids)), x -> struct(get(_ids, i - 1) AS a, x AS b))))"
+)
+
+
+def _jaccard_sql(a: str, b: str) -> str:
+    """Exact set Jaccard of two hashed shingle-key arrays, rounded to 6
+    places (set Jaccard is hash-invariant up to 2^-64 collisions)."""
+    return f"round(size(array_intersect({a}, {b})) / size(array_union({a}, {b})), 6)"
 
 
 def minhash_lsh_pairs(
@@ -205,101 +261,38 @@ def minhash_lsh_pairs(
     free size filter on the collected array, and buckets of 1 — the
     overwhelming majority — are dropped before any pair exists) → exact
     Jaccard on hashed shingle sets (array_intersect/array_union,
-    JVM-side) → threshold filter. An earlier shape (bucket-size groupBy +
-    broadcast anti-join cap + banded self-join + dropDuplicates) read the
-    banded table three times and shuffled it twice; this one shuffles it
-    once and produces the same pair set.
+    JVM-side) → threshold filter. The banded table is read once and
+    shuffled once. Every expression is SQL text, so building the plan
+    costs a few py4j round trips per stage, not one per function call.
     """
-    rows_per_band = num_hashes // bands
-    # two projections: materialize the per-shingle base hashes as a real
-    # column first — Catalyst does not CSE a subexpression repeated inside
-    # 32 higher-order functions, so inlining minhash_signature here would
-    # hash every shingle string 32× instead of once. PERSISTED because the
-    # normalize→split→shingle pass is the operator's dominant cost and
-    # both the signature path and the verify path consume it (without the
-    # persist it would run once per side of the candidate join too).
-    hs = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            token_hashes(F.col(text_col), max_tokens).alias("_th"),
-        )
-        .select("_id", hashed_shingles(F.col("_th"), shingle_k).alias("_hs"))
-        .persist()
-    )
-    # single lambda-indexed transform instead of num_hashes unrolled
-    # array_min(transform(...)) expressions: the signature values are
-    # identical (xxhash64(j, h) either way) but the expression tree is
-    # ~16× smaller, which cuts Catalyst + whole-stage-codegen compile
-    # time — the dominant cold-run cost of this operator.
-    sig = hs.select(
-        "_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda j: F.array_min(
-                F.transform("_hs", lambda h: F.xxhash64(j, h))
-            ),
-        ).alias("_sig"),
-    )
-    # slim banded table: (id, band, band_hash) only — shingle arrays never
-    # enter the band shuffle
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[F.element_at("_sig", b * rows_per_band + r + 1) for r in range(rows_per_band)]).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select("_id", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
+    # PERSISTED: the normalize→split→shingle pass is the operator's
+    # dominant cost and both the signature path and the verify path
+    # consume it (without the persist it would run once per side of the
+    # candidate join too)
+    hs = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).persist()
     # one shuffle: bucket members collected per (band, bh); singleton
     # buckets vanish here and pathological buckets (> max_bucket members,
     # a boilerplate band shared corpus-wide) are capped by the same size
     # filter — no separate bucket-size pass
     buckets = (
-        banded.groupBy("band", "bh")
-        .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
-        .filter((F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket))
-    )
-    n_ids = F.size("_ids")
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n_ids - 1),
-            lambda i: F.transform(
-                F.slice(F.col("_ids"), i + 1, n_ids),
-                lambda b: F.struct(
-                    F.get(F.col("_ids"), i - 1).alias("a"), b.alias("b")
-                ),
-            ),
-        )
+        minhash_bands(hs, num_hashes, bands)
+        .groupBy("band", "bh")
+        .agg(F.expr("sort_array(collect_list(_id)) AS _ids"))
+        .filter(f"size(_ids) >= 2 AND size(_ids) <= {max_bucket}")
     )
     pairs = (
-        buckets.select(F.explode(pair_arr).alias("_p"))
-        .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+        buckets.selectExpr(f"explode({_BUCKET_PAIRS_SQL}) AS _p")
+        .selectExpr("_p.a AS a", "_p.b AS b")
         .dropDuplicates(["a", "b"])
     )
-    # exact-Jaccard verify on the HASHED shingle sets (set Jaccard is
-    # hash-invariant up to 2^-64 collisions): reuses the persisted _hs —
-    # no second normalize/shingle pass — and compares 8-byte longs
-    # instead of strings in the intersect/union
-    shmap = hs.select("_id", F.col("_hs").alias("_sh"))
-    verified = (
-        pairs.join(shmap.select(F.col("_id").alias("a"), F.col("_sh").alias("sh_a")), "a")
-        .join(shmap.select(F.col("_id").alias("b"), F.col("_sh").alias("sh_b")), "b")
+    # exact-Jaccard verify on the persisted hashed shingle sets: no second
+    # normalize/shingle pass, and 8-byte longs instead of strings in the
+    # intersect/union
+    verified = pairs.join(hs.selectExpr("_id AS a", "_hs AS sh_a"), "a").join(
+        hs.selectExpr("_id AS b", "_hs AS sh_b"), "b"
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        verified.select(
-            "a",
-            "b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    return verified.selectExpr("a", "b", f"{_jaccard_sql('sh_a', 'sh_b')} AS jaccard").filter(
+        f"jaccard >= {float(jaccard_threshold)!r}D"
     )
 
 
@@ -332,76 +325,27 @@ def incremental_minhash_dedup(
     Returns (batch_id, corpus_id, jaccard) — batch rows whose near-dup
     already exists in the corpus. Batch-internal near-dups are
     minhash_lsh_pairs(batch)'s job, not this one's."""
-
-    def _hs(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias("_id"),
-                token_hashes(F.col(text_col), max_tokens).alias("_th"),
-            )
-            .select("_id", hashed_shingles(F.col("_th"), shingle_k).alias("_hs"))
-            .persist()
-        )
-
-    rows_per_band = num_hashes // bands
-
-    def _bands(hs: DataFrame) -> DataFrame:
-        sig = hs.select(
-            "_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda j: F.array_min(
-                    F.transform("_hs", lambda h: F.xxhash64(j, h))
-                ),
-            ).alias("_sig"),
-        )
-        return sig.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("_sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bh"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("_b"),
-        ).select("_id", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
-
-    bhs, chs = _hs(batch), _hs(corpus)
-    cb = _bands(chs)
-    # cap pathological corpus buckets before the probe join
-    hot = (
-        cb.groupBy("band", "bh")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket)
+    bhs, chs = (
+        hashed_shingle_sets(d, id_col, text_col, shingle_k, max_tokens).persist()
+        for d in (batch, corpus)
     )
+    cb = minhash_bands(chs, num_hashes, bands)
+    # cap pathological corpus buckets before the probe join
+    hot = cb.groupBy("band", "bh").count().filter(f"count > {max_bucket}")
     cb = cb.join(hot.select("band", "bh"), ["band", "bh"], "left_anti")
     cand = (
-        _bands(bhs)
+        minhash_bands(bhs, num_hashes, bands)
         .withColumnRenamed("_id", "batch_id")
         .join(cb.withColumnRenamed("_id", "corpus_id"), ["band", "bh"])
         .select("batch_id", "corpus_id")
         .dropDuplicates(["batch_id", "corpus_id"])
     )
-    verified = (
-        cand.join(bhs.select(F.col("_id").alias("batch_id"), F.col("_hs").alias("sh_b")), "batch_id")
-        .join(chs.select(F.col("_id").alias("corpus_id"), F.col("_hs").alias("sh_c")), "corpus_id")
+    verified = cand.join(bhs.selectExpr("_id AS batch_id", "_hs AS sh_b"), "batch_id").join(
+        chs.selectExpr("_id AS corpus_id", "_hs AS sh_c"), "corpus_id"
     )
-    inter = F.size(F.array_intersect("sh_b", "sh_c"))
-    union = F.size(F.array_union("sh_b", "sh_c"))
-    return verified.select(
-        "batch_id",
-        "corpus_id",
-        F.round(inter / union, 6).alias("jaccard"),
-    ).filter(F.col("jaccard") >= jaccard_threshold)
+    return verified.selectExpr(
+        "batch_id", "corpus_id", f"{_jaccard_sql('sh_b', 'sh_c')} AS jaccard"
+    ).filter(f"jaccard >= {float(jaccard_threshold)!r}D")
 
 
 def _shingle_index(
@@ -431,16 +375,9 @@ def _shingle_index(
     # string gram arrays fattened the cache and slowed every k=3
     # consumer (dedup_ngram_jaccard 1.9/1.5 → 3.6/2.7 s measured r11).
     # The hashed-longs array stays the right representation here.
-    arr = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            token_hashes(F.col(text_col), max_tokens).alias("_th"),
-        )
-        .select("_id", hashed_shingles(F.col("_th"), shingle_k).alias("_sh"))
-        .persist()
-    )
-    sizes = arr.select("_id", F.size("_sh").alias("sz"))
-    sh = arr.select("_id", F.explode("_sh").alias("s"))
+    arr = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).persist()
+    sizes = arr.select("_id", F.size("_hs").alias("sz"))
+    sh = arr.select("_id", F.explode("_hs").alias("s"))
     hot = sh.groupBy("s").agg(F.count("*").alias("_n")).filter(F.col("_n") > max_shingle_freq)
     sh = sh.join(hot, "s", "left_anti")
     return sh, sizes
@@ -550,9 +487,9 @@ def simhash_signatures(
     codegen'd, and ran ~40 ms/doc — 2000× slower than this shape; at
     100 TB the groupBy form also map-side-combines, so the shuffle stays
     O(docs), not O(shingles)."""
-    ex = df.select(
-        F.col(id_col).alias("_id"), token_hashes(F.col(text_col), max_tokens).alias("_th")
-    ).select("_id", F.explode(hashed_shingles(F.col("_th"), shingle_k)).alias("h"))
+    ex = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).select(
+        "_id", F.explode("_hs").alias("h")
+    )
     # votes: count of set bits per position vs total shingles
     votes = ex.groupBy("_id").agg(
         F.count("*").alias("_n"),
@@ -970,7 +907,7 @@ def substring_dup_spans(
     """
     w = window
     base = df.select(
-        F.col(id_col).alias("_id"), token_hashes(F.col(text_col), max_tokens).alias("_th")
+        F.col(id_col).alias("_id"), token_hashes(text_col, max_tokens).alias("_th")
     )
     th = F.col("_th")
     # (id, pos, h): every position's length-w window key. Documents

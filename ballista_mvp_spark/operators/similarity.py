@@ -190,12 +190,15 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
 
     Both forms fold left to right from 0.0 with the same promotions, so
     the results are bit-equal; a too-short array gives NULL either way
-    (`get` is NULL out of range, like zip_with's padding)."""
-    if dim is None:
+    (`get` is NULL out of range, like zip_with's padding). Both render as
+    one SQL parse over plain column references; the higher-order form
+    composes the same tree from Columns for any other argument."""
+    names = _plain_names(a, b, required=dim is not None)
+    if names is None:
         return F.aggregate(
             F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
         )
-    return F.expr(_dot_sql(_plain_name(a), _plain_name(b), dim))
+    return F.expr(_dot_sql(*names, dim))
 
 
 def _plain_name(c: Column) -> str:
@@ -211,6 +214,17 @@ def _plain_name(c: Column) -> str:
     return m.group(1)
 
 
+def _plain_names(*cols: Column, required: bool = False) -> list[str] | None:
+    """The bare names of `cols`, or None if any is not a plain column
+    reference (`required`: raise instead)."""
+    try:
+        return [_plain_name(c) for c in cols]
+    except ValueError:
+        if required:
+            raise
+        return None
+
+
 # Seed of every unrolled dot: an empty-array fold, bit-exact 0.0D. As a
 # higher-order function it is CodegenFallback, so the operator scoring
 # the dot runs outside whole-stage codegen, where the long multiply-add
@@ -220,31 +234,46 @@ def _plain_name(c: Column) -> str:
 _EJECT_SEED_SQL = "aggregate(array(), 0.0D, (acc, v) -> acc)"
 
 
-def _dot_sql(an: str, bn: str, dim: int) -> str:
+def _dot_sql(an: str, bn: str, dim: int | None) -> str:
+    if dim is None:
+        return f"aggregate(zip_with({an}, {bn}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
     e = _EJECT_SEED_SQL
     for i in range(dim):
         e = f"({e} + (get({an}, {i}) * get({bn}, {i})))"
     return e
 
 
-def _norm_sql(an: str, dim: int) -> str:
+def _norm_sql(an: str, dim: int | None) -> str:
+    if dim is None:
+        return f"SQRT(aggregate({an}, 0.0D, (acc, v) -> acc + v * v))"
     e = "0.0D"
     for i in range(dim):
         e = f"({e} + (get({an}, {i}) * get({an}, {i})))"
     return f"SQRT({e})"
 
 
+def _cosine_sql(an: str, bn: str, na: str, nb: str, dim: int | None) -> str:
+    """`cosine_from_norms` as SQL text; `na` and `nb` are SQL expressions."""
+    d = f"({na} * {nb})"
+    return f"CASE WHEN {d} != 0 THEN ({_dot_sql(an, bn, dim)} / {d}) ELSE 0.0D END"
+
+
 def norm(a: Column, dim: int | None = None) -> Column:
     """L2 norm, with `dot`'s `dim` contract. The unrolled sum starts
     from a literal 0.0: norms are per-row work on the side selects and
     stay in whole-stage codegen."""
-    if dim is None:
+    names = _plain_names(a, required=dim is not None)
+    if names is None:
         return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.expr(_norm_sql(_plain_name(a), dim))
+    return F.expr(_norm_sql(names[0], dim))
 
 
 def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return cosine_from_norms(a, b, norm(a, dim), norm(b, dim), dim)
+    names = _plain_names(a, b)
+    if names is None:
+        return cosine_from_norms(a, b, norm(a, dim), norm(b, dim), dim)
+    an, bn = names
+    return F.expr(_cosine_sql(an, bn, _norm_sql(an, dim), _norm_sql(bn, dim), dim))
 
 
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column, dim: int | None = None) -> Column:
@@ -252,8 +281,11 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column, dim: int | N
     scorers compute the norms once per row before the join, so the pair
     stage carries only the dot. A zero-magnitude or NULL vector scores
     0.0 instead of raising an ANSI DIVIDE_BY_ZERO."""
-    d = na * nb
-    return F.when(d != 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
+    names = _plain_names(a, b, na, nb)
+    if names is None:
+        d = na * nb
+        return F.when(d != 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
+    return F.expr(_cosine_sql(*names, dim))
 
 
 def brute_force_topk(
@@ -268,30 +300,22 @@ def brute_force_topk(
     cos_sim, rank). Self-matches excluded. Norms are computed once per
     row on the side selects; pass `dim` when the vector width is
     statically known (see `dot`)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col), dim).alias("_nq"),
+    q = queries.selectExpr(
+        f"{id_col} AS query_id", f"{vec_col} AS qv", f"{_norm_sql(vec_col, dim)} AS _nq"
     )
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col), dim).alias("_nc"),
+    c = candidates.selectExpr(
+        f"{id_col} AS neighbor_id", f"{vec_col} AS cv", f"{_norm_sql(vec_col, dim)} AS _nc"
     )
-    score = cosine_from_norms(F.col("qv"), F.col("cv"), F.col("_nq"), F.col("_nc"), dim)
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(score, 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    score = _cosine_sql("qv", "cv", "_nq", "_nc", dim)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        c.crossJoin(F.broadcast(q))
+        .filter("neighbor_id != query_id")
+        .selectExpr("query_id", "neighbor_id", f"round({score}, 6) AS cos_sim")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank",
+        )
+        .filter(f"rank <= {k}")
         .orderBy("query_id", "rank")
     )
 

@@ -76,6 +76,18 @@ def plan_facts(df: DataFrame) -> PlanFacts:
     )
 
 
+def sort_python_output(df: DataFrame, *cols: str) -> DataFrame:
+    """``df.orderBy(*cols)`` for a ``df`` whose plan ends in a Python
+    stage (a pandas UDF, ``applyInPandas``, ``mapInPandas``, a Python
+    UDTF). A global sort range-partitions its input, and the boundary
+    sample is a separate job over the sort's child: straight over the
+    Python stage, that job runs every Python task a second time. A
+    round-robin shuffle to ``defaultParallelism`` partitions in between
+    makes the sample read shuffle output, so the Python stage runs once."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n).orderBy(*cols)
+
+
 def analyze(df: DataFrame) -> dict:
     """ANALYZE (ExplainNode{analyze}, datafusion.proto:224-227 /
     AnalyzeNode): execute and report row count + the executed plan with

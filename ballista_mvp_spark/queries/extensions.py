@@ -19,6 +19,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as TX
+from ..plans import sort_python_output
 from ..tables import load_table
 
 
@@ -4583,58 +4584,37 @@ def text_quality(spark, sf_dir):
     (total token chars = len(norm) − (n_tokens − 1) separators), not an
     interpreted higher-order aggregate fold. Values are bit-identical to
     the TX.* functions (same numerators, denominators, rounding)."""
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    nc = F.greatest(F.char_length(t), F.lit(1))
-    norm = F.trim(F.regexp_replace(F.lower(t), r"\s+", " "))
-    s1 = docs.select(
+    sw = ", ".join(f"'{w}'" for w in TX.STOPWORDS["en"])
+    ratio = "round((char_length(text) - char_length({})) / greatest(char_length(text), 1), 6)"
+    s1 = _t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.round(
-            (F.char_length(t) - F.char_length(F.regexp_replace(t, r"[^\w\s]", "")))
-            / nc,
-            6,
-        ).alias("punct_r"),
-        F.round(
-            (
-                F.char_length(t)
-                - F.char_length(F.translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", ""))
-            )
-            / nc,
-            6,
-        ).alias("upper_r"),
-        F.round(
-            (F.char_length(t) - F.char_length(F.translate(t, "0123456789", ""))) / nc,
-            6,
-        ).alias("digit_r"),
-        F.split(norm, " ").alias("_t"),
-        F.char_length(norm).alias("_nlen"),
+        ratio.format("regexp_replace(text, '[^\\\\w\\\\s]', '')") + " AS punct_r",
+        ratio.format("translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', '')") + " AS upper_r",
+        ratio.format("translate(text, '0123456789', '')") + " AS digit_r",
+        "split(trim(regexp_replace(lower(text), '\\\\s+', ' ')), ' ') AS _t",
+        "char_length(trim(regexp_replace(lower(text), '\\\\s+', ' '))) AS _nlen",
     )
-    nt = F.size("_t")
-    ntg = F.greatest(nt, F.lit(1))
-    sw = F.array(*[F.lit(w) for w in TX.STOPWORDS["en"]])
-    s2 = s1.select(
+    s2 = s1.selectExpr(
         "doc_id",
         "punct_r",
         "upper_r",
         "digit_r",
-        F.round((F.col("_nlen") - (nt - 1)) / ntg, 6).alias("avg_wlen"),
-        F.round(
-            F.size(F.filter("_t", lambda x: F.array_contains(sw, x))) / ntg, 6
-        ).alias("sw_ratio"),
-        nt.alias("_nw"),
+        "round((_nlen - (size(_t) - 1)) / greatest(size(_t), 1), 6) AS avg_wlen",
+        f"round(size(filter(_t, x -> array_contains(array({sw}), x))) / greatest(size(_t), 1), 6) AS sw_ratio",
+        "size(_t) AS _nw",
     )
-    len_ok = F.when((F.col("_nw") >= 5) & (F.col("_nw") <= 100000), 1.0).otherwise(0.3)
-    noise = F.col("punct_r") + F.col("digit_r")
-    noise_ok = F.when(noise < 0.2, 1.0).otherwise(F.greatest(F.lit(0.0), 1.0 - noise))
-    sw_ok = F.least(F.col("sw_ratio") * 5, F.lit(1.0))
-    return s2.select(
+    len_ok = "CASE WHEN ((_nw >= 5) AND (_nw <= 100000)) THEN 1.0D ELSE 0.3D END"
+    noise = "(punct_r + digit_r)"
+    noise_ok = f"CASE WHEN ({noise} < 0.2D) THEN 1.0D ELSE greatest(0.0D, (1.0D - {noise})) END"
+    sw_ok = "least((sw_ratio * 5), 1.0D)"
+    return s2.selectExpr(
         "doc_id",
         "punct_r",
         "upper_r",
         "digit_r",
         "avg_wlen",
         "sw_ratio",
-        F.round(len_ok * 0.4 + noise_ok * 0.4 + sw_ok * 0.2, 6).alias("quality"),
+        f"round((({len_ok} * 0.4D) + ({noise_ok} * 0.4D)) + ({sw_ok} * 0.2D), 6) AS quality",
     ).orderBy("doc_id")
 
 
@@ -5090,7 +5070,7 @@ def multimodal_features(spark, sf_dir):
     operators/multimodal.featurize). Python-side computation → rows-only;
     exactness asserted in tests/test_multimodal.py."""
     docs = _t(spark, sf_dir, "documents")
-    return M.featurize(M.media_from_documents(docs)).orderBy("media_id")
+    return sort_python_output(M.featurize(M.media_from_documents(docs)), "media_id")
 
 
 def multimodal_frames(spark, sf_dir):

@@ -30,6 +30,7 @@ from ..functions.scalar import (
     similar_to,
     trunc_number,
 )
+from ..plans import sort_python_output
 from ..tables import load_table
 
 
@@ -673,15 +674,18 @@ def udf_pandas_scalar(spark, sf_dir):
         return pd.Series(np.round(np.log1p(s) * 2.0, 9))
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 500)
-    return li.select(
-        "l_orderkey", "l_linenumber", log1p_scaled(F.col("l_quantity")).alias("v")
-    ).orderBy("l_orderkey", "l_linenumber")
+    # (l_orderkey, l_linenumber) is not unique in the synthetic lineitem:
+    # v completes the order, so ties do not follow the partition layout
+    return sort_python_output(
+        li.select("l_orderkey", "l_linenumber", log1p_scaled(F.col("l_quantity")).alias("v")),
+        "l_orderkey", "l_linenumber", "v",
+    )
 
 
 UDF_PANDAS_ORACLE = """
 SELECT l_orderkey, l_linenumber, round(ln(1 + l_quantity) * 2.0, 9) AS v
 FROM lineitem WHERE l_orderkey < 500
-ORDER BY l_orderkey, l_linenumber
+ORDER BY l_orderkey, l_linenumber, v
 """
 
 
@@ -699,10 +703,11 @@ def udaf_apply_in_pandas(spark, sf_dir):
         )
 
     li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .applyInPandas(weighted_mean, schema="l_returnflag string, wmean double")
-        .orderBy("l_returnflag")
+    return sort_python_output(
+        li.groupBy("l_returnflag").applyInPandas(
+            weighted_mean, schema="l_returnflag string, wmean double"
+        ),
+        "l_returnflag",
     )
 
 
@@ -843,12 +848,11 @@ def udtf_ngrams(spark, sf_dir):
     _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 29 == 0).createOrReplaceTempView(
         "_udtf_docs"
     )
-    return spark.sql(
-        """
-        SELECT d.doc_id, g.ngram, g.pos
-        FROM _udtf_docs d, LATERAL bigrams_udtf(d.text, 2) g
-        ORDER BY d.doc_id, g.pos
-        """
+    return sort_python_output(
+        spark.sql(
+            "SELECT d.doc_id, g.ngram, g.pos FROM _udtf_docs d, LATERAL bigrams_udtf(d.text, 2) g"
+        ),
+        "doc_id", "pos",
     )
 
 

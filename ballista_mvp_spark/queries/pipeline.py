@@ -11,6 +11,8 @@ can replay them.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -1739,24 +1741,33 @@ def versioned_time_travel(spark, sf_dir):
             .withColumn("o_totalprice", F.col("o_totalprice") * 2)
         )
         V.merge_versioned(spark, t, src, key="o_orderkey", stats_cols=["o_orderkey"])
-        rows = []
-        for v in (1, 2, 3, 4):
-            n, s, c = (
-                V.read_versioned(spark, t, version=v)
-                .agg(
-                    F.count(F.lit(1)),
-                    F.round(F.sum("o_totalprice"), 2),
-                    F.countDistinct("o_custkey"),
-                )
-                .first()
-            )
-            rows.append((v, n, float(s), c))
+        rows = _per_version(
+            spark,
+            t,
+            F.count(F.lit(1)),
+            F.round(F.sum("o_totalprice"), 2),
+            F.countDistinct("o_custkey"),
+        )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    # rows are built in version order: the ORDER BY needs no sort job
     return local_frame(
         spark, rows, "version int, n_orders bigint, sum_price double, n_cust bigint"
     )
+
+
+def _per_version(spark, path: str, *aggs) -> list[tuple]:
+    """``aggs`` over each of versions 1-4 of the versioned table at
+    ``path``, as ``(version, *values)`` rows in version order. The four
+    time-travel reads are tagged with their version, unioned and grouped:
+    one aggregate instead of one per version."""
+    from ..sources import versioned as V
+
+    tagged = reduce(
+        lambda a, b: a.unionByName(b),
+        (V.read_versioned(spark, path, version=v).withColumn("_v", F.lit(v)) for v in (1, 2, 3, 4)),
+    )
+    got = {r[0]: tuple(r[1:]) for r in tagged.groupBy("_v").agg(*aggs).collect()}
+    return [(v, *got[v]) for v in (1, 2, 3, 4)]
 
 
 VERSIONED_TIME_TRAVEL_ORACLE = """
@@ -1926,21 +1937,15 @@ def versioned_update_restore(spark, sf_dir):
         )
         eng.sql("OPTIMIZE vur_tbl")
         eng.sql("RESTORE TABLE vur_tbl TO VERSION AS OF 1")
-        rows = []
-        for v in (1, 2, 3, 4):
-            n, s, u = (
-                V.read_versioned(spark, t, version=v)
-                .agg(
-                    F.count(F.lit(1)),
-                    F.round(F.sum("o_totalprice"), 2),
-                    F.count(F.when(F.col("o_orderstatus") == "F,U", 1)),
-                )
-                .first()
-            )
-            rows.append((v, n, float(s), u))
+        rows = _per_version(
+            spark,
+            t,
+            F.count(F.lit(1)),
+            F.round(F.sum("o_totalprice"), 2),
+            F.count(F.when(F.col("o_orderstatus") == "F,U", 1)),
+        )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    # rows are built in version order: the ORDER BY needs no sort job
     return local_frame(
         spark, rows, "version int, n_orders bigint, sum_price double, n_updated bigint"
     )

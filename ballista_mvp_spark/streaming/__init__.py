@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import events_frame
+from ..tables import events_frame, file_schema
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _WINDOW = "1 hour"
@@ -40,38 +41,58 @@ def drain(spark: SparkSession, plan: DataFrame, mode: str) -> DataFrame:
     """Run the streaming ``plan`` over everything its source holds now and
     return what it wrote, as a batch DataFrame.
 
-    The plan runs into a uniquely named memory sink in output ``mode``.
-    Whatever happens, the query is stopped and the sink's temp view
-    dropped, so the session keeps no state from the drain: the returned
-    frame holds the sink through its analyzed plan and stays usable
-    after the drop, and the rows go when it does."""
+    The plan runs into a uniquely named memory sink in output ``mode``,
+    with ``_state_partitions``. Whatever happens, the query is stopped
+    and the sink's temp view dropped, so the session keeps no state from
+    the drain: the returned frame holds the sink through its analyzed
+    plan and stays usable after the drop, and the rows go when it does."""
     name = f"drain_{uuid.uuid4().hex}"
-    q = plan.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        out = spark.table(name)
-        spark.catalog.dropTempView(name)
+    with _state_partitions(spark):
+        q = plan.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            out = spark.table(name)
+            spark.catalog.dropTempView(name)
     return out
 
 
 def drain_batches(stream: DataFrame, fn, checkpoint_path: str, mode: str = "append") -> None:
     """Run ``fn(batch_df, batch_id)`` on every micro-batch of ``stream``
     until everything its source holds now is processed, then stop the
-    query (also on failure). Restarting with the same
-    ``checkpoint_path`` resumes offsets and state, so a second call
-    processes only what arrived since the first."""
-    q = (
-        stream.writeStream.outputMode(mode)
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(fn)
-        .start()
-    )
+    query (also on failure). The query starts with ``_state_partitions``.
+    Restarting with the same ``checkpoint_path`` resumes offsets and
+    state (and the partition count the checkpoint recorded), so a second
+    call processes only what arrived since the first."""
+    with _state_partitions(stream.sparkSession):
+        q = (
+            stream.writeStream.outputMode(mode)
+            .option("checkpointLocation", checkpoint_path)
+            .foreachBatch(fn)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
+@contextmanager
+def _state_partitions(spark: SparkSession):
+    """Start a streaming query with ``spark.sql.shuffle.partitions`` at
+    ``defaultParallelism``, then restore the session's value. A stateful
+    query fixes its state-store partition count from that conf when it
+    starts, and runs one state-store task per partition in every
+    micro-batch: at Spark's default of 200 on a few cores, those tasks
+    dominate each batch."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
     try:
-        q.processAllAvailable()
+        yield
     finally:
-        q.stop()
+        spark.conf.set(key, prev)
 
 
 def tumbling_agg(events: DataFrame) -> DataFrame:
@@ -343,9 +364,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the events parquet with ts normalized to LTZ."""
 
     def read() -> DataFrame:
-        schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
         return (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(file_schema(spark, sf_dir, "events"))
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
@@ -564,44 +584,9 @@ def run_neardedup_ingest(
     """
     from ..operators import dedup as D
 
-    rows_per_band = num_hashes // bands
-
     def _shingle_bands(df: DataFrame):
-        hs = (
-            df.select(
-                F.col("doc_id").alias("_id"),
-                D.token_hashes(F.col("text")).alias("_th"),
-            )
-            .select("_id", D.hashed_shingles(F.col("_th"), shingle_k).alias("_hs"))
-            .persist()
-        )
-        sig = hs.select(
-            "_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda j: F.array_min(F.transform("_hs", lambda h: F.xxhash64(j, h))),
-            ).alias("_sig"),
-        )
-        bands_df = sig.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("_sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bh"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("_b"),
-        ).select("_id", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
-        return hs, bands_df
+        hs = D.hashed_shingle_sets(df, "doc_id", "text", shingle_k).persist()
+        return hs, D.minhash_bands(hs, num_hashes, bands)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.dropDuplicates(["doc_id"])

@@ -22,6 +22,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -42,16 +43,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     or rebuild the relation (DataFrames are immutable, so handing the
     same plan out is safe; only the canonical read-only testdata flows
     through here)."""
-    cache = getattr(spark, "_bms_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bms_table_cache = cache
+    cache = _session_cache(spark)
     key = (sf_dir, name)
     if key in cache:
         return cache[key]
     df = _load_table_uncached(spark, sf_dir, name)
     cache[key] = df
     return df
+
+
+def file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet schema of a synthetic table's file as Spark infers it,
+    memoized per session next to ``load_table``'s frames. A streaming
+    source must be given its schema; inferring it runs a Spark job on
+    every call. Call it after ``events_frame`` has set the read confs."""
+    cache = _session_cache(spark)
+    key = (sf_dir, name, "schema")
+    if key not in cache:
+        cache[key] = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+    return cache[key]
+
+
+def _session_cache(spark: SparkSession) -> dict:
+    cache = getattr(spark, "_bms_table_cache", None)
+    if cache is None:
+        cache = {}
+        spark._bms_table_cache = cache
+    return cache
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

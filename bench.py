@@ -70,21 +70,53 @@ def _machine_state() -> dict:
 
 def time_pass(spark, sf_dir: str, names) -> dict[str, dict]:
     """One timed pass over registry queries, in order. Per name:
-    ``{"build_s", "wall_s"}`` (``perf_counter`` seconds for the builder
-    call, and for the builder call plus ``collect()``), or ``{"error"}``
+    ``{"build_s", "build_calls", "wall_s"}`` (``perf_counter`` seconds for
+    the builder call, the py4j commands the builder call sent to the JVM,
+    and seconds for the builder call plus ``collect()``), or ``{"error"}``
     if the query raised; one bad query does not stop the pass."""
+    commands = py4j_commands(spark)
     out: dict[str, dict] = {}
     for name in names:
+        c0 = commands[0]
         t0 = time.perf_counter()
         try:
             df = ALL_QUERIES[name](spark, sf_dir)
             build_s = time.perf_counter() - t0
+            build_calls = commands[0] - c0
             df.collect()
         except Exception as e:  # noqa: BLE001 — recorded, the caller decides
             out[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
             continue
-        out[name] = {"build_s": build_s, "wall_s": time.perf_counter() - t0}
+        out[name] = {
+            "build_s": build_s,
+            "build_calls": build_calls,
+            "wall_s": time.perf_counter() - t0,
+        }
     return out
+
+
+def py4j_commands(spark) -> list[int]:
+    """A one-element list holding the number of py4j commands this
+    process has sent to ``spark``'s JVM since the first call, counted by
+    wrapping the gateway client's ``send_command`` (once per client).
+    Object-release messages are not counted: py4j's finalizer thread
+    sends them whenever Python collects a JVM proxy, not when the
+    builder asks for work."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    counter = getattr(client, "_bench_commands", None)
+    if counter is None:
+        counter, send = [0], client.send_command
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                counter[0] += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        client._bench_commands = counter
+    return counter
 
 
 def main() -> None:

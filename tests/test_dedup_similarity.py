@@ -77,7 +77,7 @@ def test_megadoc_max_tokens_truncation(spark):
 
     # the knob actually truncates: capped token array length == max_tokens
     n = (
-        mega.select(F.size(D.token_hashes(F.col("text"), 5_000)).alias("n"))
+        mega.select(F.size(D.token_hashes("text", 5_000)).alias("n"))
         .head()
         .n
     )

@@ -5,6 +5,7 @@ the fast mirror of the driver's t2 gate (full-scale run:
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -88,7 +89,14 @@ def test_entry_contract(spark):
     assert set(E.oracle_sql()) <= set(E.queries())
 
 
-def test_no_driver_unsafe_output_columns(spark):
+@pytest.fixture(scope="module")
+def registry_frames(spark):
+    """Every registry query built once at sf0.001, for the contract tests
+    that inspect plans and schemas."""
+    return {name: build(spark, SF_SMALL) for name, build in ALL_QUERIES.items()}
+
+
+def test_no_driver_unsafe_output_columns(registry_frames):
     """Registry contract: no oracle-backed query may emit a top-level
     array/map/struct/decimal column. The driver's pandas canonicalization
     crashes on container cells (``unhashable type: 'list'``) and renders
@@ -99,11 +107,59 @@ def test_no_driver_unsafe_output_columns(spark):
 
     bad = []
     for name in sorted(ALL_ORACLES):
-        schema = ALL_QUERIES[name](spark, SF_SMALL).schema
+        schema = registry_frames[name].schema
         for f in schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType, DecimalType)):
                 bad.append((name, f.name, f.dataType.simpleString()))
     assert not bad, f"driver-unsafe output columns: {bad}"
+
+
+def _python_nodes(plan):
+    """Physical nodes with Python-worker metrics, descending through AQE
+    query stages and into cached relations."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _python_nodes(plan.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _python_nodes(plan.plan())
+        return
+    if cls == "InMemoryTableScanExec":
+        yield from _python_nodes(plan.relation().cachedPlan())
+    if plan.metrics().contains("pythonNumRowsReceived"):
+        yield cls, plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _python_nodes(kids.apply(i))
+
+
+_PY_NODE = re.compile(r"Python|Pandas|InArrow")
+
+
+def test_python_stages_run_once(registry_frames):
+    """Every Python stage in a registry query's final plan runs once: its
+    rows received from the Python workers equal one evaluation of the
+    node (its row count, recounted after the query). A global sort
+    straight over a Python stage fails this: its range-partition sample
+    job runs the Python tasks a second time (plans.sort_python_output)."""
+    checked, twice = [], []
+    for name, df in registry_frames.items():
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        if not any(_PY_NODE.search(n) for n in re.findall(r"^[\s:|+-]*(\w+)", optimized, re.M)):
+            continue
+        df.collect()
+        # read every node's metric before any recount runs a node again
+        nodes = [
+            (cls, node, node.metrics().apply("pythonNumRowsReceived").value())
+            for cls, node in _python_nodes(df._jdf.queryExecution().executedPlan())
+        ]
+        for cls, node, received in nodes:
+            once = node.execute().count()
+            checked.append(name)
+            if received != once:
+                twice.append((name, cls, received, once))
+    assert {"udf_pandas_scalar", "udaf_apply_in_pandas"} <= set(checked), checked
+    assert not twice, twice
 
 
 def test_bench_membership_frozen():

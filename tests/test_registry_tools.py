@@ -32,6 +32,7 @@ def test_time_pass_times_builds_and_records_errors(spark, monkeypatch):
     assert list(out) == ["tpch_q1", "boom", "sim_topk"]
     for name in ("tpch_q1", "sim_topk"):
         assert 0 < out[name]["build_s"] <= out[name]["wall_s"], out[name]
+        assert out[name]["build_calls"] > 0, out[name]
     assert out["boom"] == {"error": "RuntimeError: builder failed"}
 
 

@@ -6,7 +6,8 @@ Runs bench.py's timing pass (same timed interval, same warm-up), so the
 numbers are comparable with BENCH history: one cold pass (plan + codegen
 + execute), then --warm-passes warm passes, keeping each query's best.
 `build` is the cold pass's builder-call time per query (driver-side
-DataFrame construction, including any jobs a builder runs eagerly).
+DataFrame construction, including any jobs a builder runs eagerly), and
+`build_calls` the py4j commands each builder call sent to the JVM.
 Usage:
 
     python tools/time_all.py [--sf-dir /root/testdata/sf0.1] [--out /tmp/x.json]
@@ -52,14 +53,20 @@ def main() -> None:
     cold = {n: round(cold_pass[n]["wall_s"], 3) for n in ok if n not in errs}
     warm = {n: round(best[n], 3) for n in cold}
     build = {n: round(cold_pass[n]["build_s"], 3) for n in cold}
+    build_calls = {n: cold_pass[n]["build_calls"] for n in cold}
     for n in cold:
-        print(f"{n:40s} cold={cold[n]:7.3f} warm={warm[n]:7.3f} build={build[n]:7.3f}", file=sys.stderr)
+        print(
+            f"{n:40s} cold={cold[n]:7.3f} warm={warm[n]:7.3f} build={build[n]:7.3f} "
+            f"calls={build_calls[n]:6d}",
+            file=sys.stderr,
+        )
 
     out = {
         "sf_dir": args.sf_dir,
         "cold": cold,
         "warm": warm,
         "build": build,
+        "build_calls": build_calls,
         "errors": errs,
         "cold_total": round(sum(cold.values()), 3),
         "warm_total": round(sum(warm.values()), 3),
