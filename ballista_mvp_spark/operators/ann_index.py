@@ -139,7 +139,7 @@ def probe_ivf_index(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("q_v"), F.col("embedding"), dim), 6).alias("cos_sim"),
+            F.round(cosine("q_v", "embedding", dim), 6).alias("cos_sim"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -188,7 +188,7 @@ def build_ivfpq_index(
         "mi int, ci int, centroid array<double>",
     )
     bdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    # r11: codes + cell from ONE corpus pass (the old shape ran
+    # codes + cell from ONE corpus pass (the old shape ran
     # pq_encode and _assign_cells as two full passes over the same
     # input and equi-joined them back on _id — an extra pass + shuffle;
     # same fuse as ivfpq_topk, see similarity._pq_codes)
@@ -296,7 +296,7 @@ def probe_ivfpq_index(
     return (
         approx.join(cand_vecs, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .withColumn("cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv2"), dim), 6))
+        .withColumn("cos_sim", F.round(cosine("_cv", "_qv2", dim), 6))
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")

@@ -62,7 +62,7 @@ def shingles(col: Column, k: int = 3, max_tokens: int | None = None) -> Column:
     words. The `transform(sequence(...), i -> concat_ws(slice(...)))`
     form it replaces is CodegenFallback (higher-order functions are
     interpreted per element) and ran once per WORD of the corpus —
-    measured r11 at sf0.1: 6.3 s → 0.5 s (k=3), 3.4 s → 0.4 s (k=8),
+    measured at sf0.1: 6.3 s → 0.5 s (k=3), 3.4 s → 0.4 s (k=8),
     byte-identical arrays on the whole corpus and on the <k-token edge
     cases (the `when` branch reproduces the old greatest(...,1) →
     slice(toks,1,k) behavior: one short gram of whatever tokens exist,
@@ -348,39 +348,47 @@ def incremental_minhash_dedup(
     ).filter(f"jaccard >= {float(jaccard_threshold)!r}D")
 
 
-def _shingle_index(
+def _common_shingle_counts(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_k: int,
     max_shingle_freq: int,
-    max_tokens: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared inverted-index base for the exact set-overlap operators:
-    returns (sh: (_id, s) exploded hashed-shingle index with stop-shingles
-    dropped, sizes: (_id, sz)).
+    max_tokens: int | None,
+) -> DataFrame:
+    """(a, b, c, sza, szb) for every pair a < b that shares a hashed
+    word-k-gram shingle: `c` common shingles, `sza`/`szb` the two set
+    sizes. The shared inverted-index body of the exact set-overlap
+    operators.
 
     Plan choices that matter at scale:
     - the shingle ARRAY table is persisted (slim: id + ~50 longs/doc), so
       the dominant normalize→split→shingle pass runs once even though the
-      index is consumed by both sides of the self-join;
+      index is consumed by both sides of the self-join (string gram
+      arrays here fattened the cache and slowed every k=3 consumer:
+      OPTIMIZATION_r11.md);
     - set sizes come from F.size on the array — no groupBy shuffle;
     - the join key is xxhash64(shingle): an 8-byte shuffle key instead of
       a multi-word string (set-overlap counts are hash-invariant up to
-      2^-64 collisions)."""
-    # r11: the regex-gram + post-explode-hash rewrite applied to the
-    # unpersisted shingle consumers (decontaminate, overlap_matrix) was
-    # ALSO tried here and REVERTED: this index is persist-protected, so
-    # the interpreted-HOF build cost is paid once and amortized, while
-    # string gram arrays fattened the cache and slowed every k=3
-    # consumer (dedup_ngram_jaccard 1.9/1.5 → 3.6/2.7 s measured r11).
-    # The hashed-longs array stays the right representation here.
+      2^-64 collisions);
+    - shingles held by more than `max_shingle_freq` documents
+      (stop-shingles) are dropped, which bounds the self-join fan-out."""
     arr = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).persist()
     sizes = arr.select("_id", F.size("_hs").alias("sz"))
     sh = arr.select("_id", F.explode("_hs").alias("s"))
     hot = sh.groupBy("s").agg(F.count("*").alias("_n")).filter(F.col("_n") > max_shingle_freq)
     sh = sh.join(hot, "s", "left_anti")
-    return sh, sizes
+    a = sh.select(F.col("_id").alias("a"), "s")
+    b = sh.select(F.col("_id").alias("b"), "s")
+    common = (
+        a.join(b, "s")
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("c"))
+    )
+    sa = sizes.select(F.col("_id").alias("a"), F.col("sz").alias("sza"))
+    sb = sizes.select(F.col("_id").alias("b"), F.col("sz").alias("szb"))
+    return common.join(sa, "a").join(sb, "b")
 
 
 def ngram_jaccard_pairs(
@@ -397,22 +405,8 @@ def ngram_jaccard_pairs(
     common → |A∪B| = |A|+|B|-common. Ground truth for the LSH path; the
     `max_shingle_freq` cap drops stop-shingles that would square the
     join (standard inverted-index pruning at scale)."""
-    sh, sizes = _shingle_index(
-        df, id_col, text_col, shingle_k, max_shingle_freq, max_tokens
-    )
-    a = sh.select(F.col("_id").alias("a"), "s")
-    b = sh.select(F.col("_id").alias("b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col("_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("_id").alias("b"), F.col("sz").alias("szb"))
     return (
-        common.join(sa, "a")
-        .join(sb, "b")
+        _common_shingle_counts(df, id_col, text_col, shingle_k, max_shingle_freq, max_tokens)
         .select(
             "a",
             "b",
@@ -438,27 +432,11 @@ def containment_pairs(
     a 10-line doc embedded in a 1000-line doc has Jaccard ~0.01 but
     containment 1.0). Output is directed: (contained, container) with the
     smaller shingle set as ``contained`` (ties broken by lower id) — the
-    drop-list side for a training-data pipeline.
-
-    Same inverted-index plan as ngram_jaccard_pairs: one shuffle on the
-    shingle key, stop-shingle cap bounds the self-join fan-out at scale."""
-    sh, sizes = _shingle_index(
-        df, id_col, text_col, shingle_k, max_shingle_freq, max_tokens
-    )
-    a = sh.select(F.col("_id").alias("a"), "s")
-    b = sh.select(F.col("_id").alias("b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col("_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("_id").alias("b"), F.col("sz").alias("szb"))
+    drop-list side for a training-data pipeline. Same inverted-index plan
+    as ngram_jaccard_pairs."""
     cont = F.col("c") / F.least(F.col("sza"), F.col("szb"))
     return (
-        common.join(sa, "a")
-        .join(sb, "b")
+        _common_shingle_counts(df, id_col, text_col, shingle_k, max_shingle_freq, max_tokens)
         .filter(cont >= threshold)
         .select(
             F.when(F.col("szb") < F.col("sza"), F.col("b")).otherwise(F.col("a")).alias("contained"),
@@ -475,36 +453,31 @@ def simhash_signatures(
     shingle_k: int = 3,
     max_tokens: int | None = None,
 ) -> DataFrame:
-    """(id, sh) 64-bit SimHash signatures from shingle xxhash64 bit votes.
+    """(_id, sh) 64-bit SimHash signatures from shingle xxhash64 bit votes.
     Features are word-k-gram shingles: single tokens are too coarse when
     documents share a small vocabulary (every signature collapses to the
     vocabulary's signature).
 
-    Plan: explode the hashed shingles and take 63 codegen'd conditional
-    SUMs in one hash aggregate keyed on the doc id (a narrow one-column
-    shuffle with map-side combine). An earlier all-expression form (63
-    higher-order `aggregate` folds per row) was interpreted, not
-    codegen'd, and ran ~40 ms/doc — 2000× slower than this shape; at
-    100 TB the groupBy form also map-side-combines, so the shuffle stays
-    O(docs), not O(shingles)."""
-    ex = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).select(
-        "_id", F.explode("_hs").alias("h")
+    Plan: explode the hashed shingles and take 63 codegen'd SUMs in one
+    hash aggregate keyed on the doc id (a narrow one-column shuffle with
+    map-side combine, so the shuffle stays O(docs), not O(shingles)); an
+    all-expression form (63 higher-order `aggregate` folds per row) is
+    interpreted and ~2000× slower. Bit i of the signature is set when
+    more than half the shingles have it set; bit 63 is excluded to stay
+    in signed-long range. The votes and the signature are SQL text (one
+    parse each instead of ~9,000 Column calls)."""
+    ex = hashed_shingle_sets(df, id_col, text_col, shingle_k, max_tokens).selectExpr(
+        "_id", "explode(_hs) AS h"
     )
-    # votes: count of set bits per position vs total shingles
     votes = ex.groupBy("_id").agg(
-        F.count("*").alias("_n"),
-        *[
-            F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1))).alias(f"_b{i}")
-            for i in range(63)  # bit 63 excluded to stay in signed-long range
-        ],
+        F.expr("count(*) AS _n"),
+        *[F.expr(f"sum(shiftright(h, {i}) & 1) AS _b{i}") for i in range(63)],
     )
-    sh = None
-    for i in range(63):
-        bit = F.when(F.col(f"_b{i}") * 2 > F.col("_n"), F.lit(2 ** i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sh = bit if sh is None else sh + bit
-    return votes.select("_id", sh.alias("sh"))
+    sh = " + ".join(
+        f"CASE WHEN _b{i} * 2 > _n THEN CAST({2 ** i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for i in range(63)
+    )
+    return votes.selectExpr("_id", f"{sh} AS sh")
 
 
 def simhash_pairs(
@@ -538,8 +511,7 @@ def hamming_band_pairs(
     degenerate-signature corpus silently goes quadratic — a
     LOW-ENTROPY signature source (measured: the byte-stat stand-in
     hash over ASCII text concentrates into few effective bits — 443k
-    "pairs" from 100k docs, tools/scale_stress.py --media; SCALE.md
-    Multimodal) turns one hot (band, chunk) bucket into a quadratic
+    "pairs" from 100k docs; SCALE.md Multimodal) turns one hot (band, chunk) bucket into a quadratic
     self-join, and pairs from such buckets are signature collisions,
     not near-dups. A well-mixed 64-bit signature never produces such
     buckets below ~2¹⁶-docs-per-chunk density. The default stays None
@@ -588,7 +560,7 @@ def signature_entropy(sigs: DataFrame) -> dict:
     """Pre-flight health check for ANY banded pair stage over (_id, sh)
     64-bit signatures: a degenerate signature source (too few effective
     bits) makes banding quadratic no matter the scheme (measured:
-    tools/scale_stress.py --media; SCALE.md Multimodal). Returns
+    SCALE.md Multimodal). Returns
     {n, n_distinct, distinct_ratio, max_bucket, max_bucket_share} where
     max_bucket is the largest (band, 16-bit chunk) bucket the pair
     stage would self-join. Healthy: distinct_ratio near 1 and
@@ -683,8 +655,8 @@ def connected_components(
         # the convergence flag is computed INSIDE the relabel projection
         # (old comp is already on the join row), so the per-round
         # changed-test scans the checkpointed result instead of paying a
-        # second shuffle join against the previous labels (r12, VERDICT
-        # r11 #7 — one shuffle per round removed)
+        # second shuffle join against the previous labels (one shuffle
+        # per round)
         new_comp = F.least(
             F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))
         )
@@ -751,7 +723,7 @@ def connected_components_twophase(
     _round = 0
     # carried across rounds: |e| was already counted when e was LAST
     # round's `small` — re-counting it (and the isEmpty probe) cost two
-    # extra jobs per round on a checkpointed table (r12, VERDICT r11 #7)
+    # extra jobs per round on a checkpointed table
     n_e = e.count()
     for _round in range(max_rounds):
         if n_e == 0:

@@ -224,9 +224,8 @@ def label_propagation(
         # SMALLEST label) as a map-side-combinable min(struct(-count,
         # label)) hash aggregate — the row_number-window form sorts
         # the whole O(edges) count table every superstep (measured 6.7×
-        # wall at 4× nodes in tools/scale_stress.py --graph before this
-        # rewrite); lexicographic struct-min keeps the exact same
-        # winner. Only the COUNT is negated (always a non-negative
+        # wall at 4× nodes); lexicographic struct-min keeps the exact
+        # same winner. Only the COUNT is negated (always a non-negative
         # long), so the label column may be any orderable type — string
         # doc/url ids included.
         labels = (

@@ -21,7 +21,6 @@ from __future__ import annotations
 import logging
 import math
 import random
-import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -37,7 +36,7 @@ def nested_double_lit(obj, elem_sql_type: str = "double") -> Column:
 
     ``F.lit`` on a nested Python list recurses into ``array(*map(lit,
     ...))`` — one py4j round trip per float, ~0.5 ms each, ALL driver
-    time, paid at every DataFrame *construction* (measured r11: 0.76 s
+    time, paid at every DataFrame *construction* (measured: 0.76 s
     for a 4×6×64 plane set; sim_ann_lsh built two of those per
     invocation, so ~1.6 s of its 2.9 s wall was building the plan, not
     running it). And any per-element tree (F.lit or a parsed
@@ -180,49 +179,25 @@ def _non_scan_node(df: DataFrame) -> str | None:
     return walk(df._jdf.queryExecution().analyzed())
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. Without `dim` it is a higher-order `aggregate` over
-    `zip_with`, which Spark interprets per element. With `dim` (the true
-    vector width: only the first `dim` elements are summed) it unrolls to
-    `dim` multiply-adds on plain column references, seeded with
-    `_EJECT_SEED_SQL` — about 10× faster per pair, but ~dim plan nodes,
-    so pass `dim` only on high-pair-volume scoring paths.
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Dot product of the array columns named `a` and `b`. Without `dim`
+    it is a higher-order `aggregate` over `zip_with`, which Spark
+    interprets per element. With `dim` (the true vector width: only the
+    first `dim` elements are summed) it unrolls to `dim` multiply-adds,
+    seeded with `_EJECT_SEED_SQL` — about 10× faster per pair, but ~dim
+    plan nodes, so pass `dim` only on high-pair-volume scoring paths.
 
     Both forms fold left to right from 0.0 with the same promotions, so
     the results are bit-equal; a too-short array gives NULL either way
-    (`get` is NULL out of range, like zip_with's padding). Both render as
-    one SQL parse over plain column references; the higher-order form
-    composes the same tree from Columns for any other argument."""
-    names = _plain_names(a, b, required=dim is not None)
-    if names is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-    return F.expr(_dot_sql(*names, dim))
-
-
-def _plain_name(c: Column) -> str:
-    """The bare column name of `c`. Unrolled kernels render as one SQL
-    parse over plain column references (composing ~dim Column ops costs
-    ~0.6 s of driver time per call site); any other argument raises —
-    name it first with `withColumn`."""
-    m = re.fullmatch(r"Column<'([A-Za-z_][A-Za-z0-9_]*)'>", str(c))
-    if m is None:
-        raise ValueError(
-            f"an unrolled vector kernel (dim=...) needs a plain column reference, got {c}"
-        )
-    return m.group(1)
-
-
-def _plain_names(*cols: Column, required: bool = False) -> list[str] | None:
-    """The bare names of `cols`, or None if any is not a plain column
-    reference (`required`: raise instead)."""
-    try:
-        return [_plain_name(c) for c in cols]
-    except ValueError:
-        if required:
-            raise
-        return None
+    (`get` is NULL out of range, like zip_with's padding). Every vector
+    kernel renders as one SQL parse; to score a computed vector, name it
+    first with `withColumn`."""
+    return F.expr(_dot_sql(_ident(a), _ident(b), dim))
 
 
 # Seed of every unrolled dot: an empty-array fold, bit-exact 0.0D. As a
@@ -258,34 +233,27 @@ def _cosine_sql(an: str, bn: str, na: str, nb: str, dim: int | None) -> str:
     return f"CASE WHEN {d} != 0 THEN ({_dot_sql(an, bn, dim)} / {d}) ELSE 0.0D END"
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm, with `dot`'s `dim` contract. The unrolled sum starts
-    from a literal 0.0: norms are per-row work on the side selects and
-    stay in whole-stage codegen."""
-    names = _plain_names(a, required=dim is not None)
-    if names is None:
-        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.expr(_norm_sql(names[0], dim))
+def norm(a: str, dim: int | None = None) -> Column:
+    """L2 norm of the array column named `a`, with `dot`'s `dim`
+    contract. The unrolled sum starts from a literal 0.0: norms are
+    per-row work on the side selects and stay in whole-stage codegen."""
+    return F.expr(_norm_sql(_ident(a), dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    names = _plain_names(a, b)
-    if names is None:
-        return cosine_from_norms(a, b, norm(a, dim), norm(b, dim), dim)
-    an, bn = names
+def cosine(a: str, b: str, dim: int | None = None) -> Column:
+    """Cosine of the array columns named `a` and `b` (see
+    `cosine_from_norms`), norms computed inline."""
+    an, bn = _ident(a), _ident(b)
     return F.expr(_cosine_sql(an, bn, _norm_sql(an, dim), _norm_sql(bn, dim), dim))
 
 
-def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column, dim: int | None = None) -> Column:
-    """Cosine of `a` and `b` given their L2 norms `na` and `nb`. Pair
-    scorers compute the norms once per row before the join, so the pair
-    stage carries only the dot. A zero-magnitude or NULL vector scores
-    0.0 instead of raising an ANSI DIVIDE_BY_ZERO."""
-    names = _plain_names(a, b, na, nb)
-    if names is None:
-        d = na * nb
-        return F.when(d != 0, dot(a, b, dim) / d).otherwise(F.lit(0.0))
-    return F.expr(_cosine_sql(*names, dim))
+def cosine_from_norms(a: str, b: str, na: str, nb: str, dim: int | None = None) -> Column:
+    """Cosine of the array columns named `a` and `b` given the columns
+    `na` and `nb` holding their L2 norms. Pair scorers compute the norms
+    once per row before the join, so the pair stage carries only the
+    dot. A zero-magnitude or NULL vector scores 0.0 instead of raising
+    an ANSI DIVIDE_BY_ZERO."""
+    return F.expr(_cosine_sql(*map(_ident, (a, b, na, nb)), dim))
 
 
 def brute_force_topk(
@@ -352,12 +320,12 @@ def maxsim_topk(
         F.col(doc_col).alias("query_id"),
         qpos.alias("_qpos"),
         F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col), dim).alias("_nq"),
+        norm(vec_col, dim).alias("_nq"),
     )
     d = doc_vecs.select(
         F.col(doc_col).alias("doc_id"),
         F.col(vec_col).alias("_dv"),
-        norm(F.col(vec_col), dim).alias("_nd"),
+        norm(vec_col, dim).alias("_nd"),
     )
     per_qvec = (
         d.crossJoin(F.broadcast(q))
@@ -365,9 +333,7 @@ def maxsim_topk(
         .groupBy("query_id", "doc_id", "_qpos")
         .agg(
             F.max(
-                cosine_from_norms(
-                    F.col("_qv"), F.col("_dv"), F.col("_nq"), F.col("_nd"), dim
-                )
+                cosine_from_norms("_qv", "_dv", "_nq", "_nd", dim)
             ).alias("_mx")
         )
     )
@@ -523,7 +489,7 @@ def lsh_ann_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = cand.select(
-        "query_id", "neighbor_id", F.round(cosine(F.col("qv"), F.col("cv"), dim), 6).alias("cos_sim")
+        "query_id", "neighbor_id", F.round(cosine("qv", "cv", dim), 6).alias("cos_sim")
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
@@ -562,13 +528,13 @@ def cosine_dup_pairs(
     a = df.select(
         F.col(id_col).alias("a"),
         F.col(vec_col).alias("va"),
-        norm(F.col(vec_col), dim).alias("_na"),
+        norm(vec_col, dim).alias("_na"),
         *([scope.alias("_scope")] if scope is not None else []),
     )
     b = df.select(
         F.col(id_col).alias("b"),
         F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col), dim).alias("_nb"),
+        norm(vec_col, dim).alias("_nb"),
         *([scope.alias("_scope")] if scope is not None else []),
     )
     # unscoped all-pairs (the documented sf-scale baseline ONLY): the b
@@ -599,9 +565,7 @@ def cosine_dup_pairs(
             "a",
             "b",
             F.round(
-                cosine_from_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), dim
-                ),
+                cosine_from_norms("va", "vb", "_na", "_nb", dim),
                 6,
             ).alias("cos_sim"),
         )
@@ -659,7 +623,7 @@ def lsh_cosine_dup_pairs(
     vmap = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        norm(F.col(vec_col), dim).alias("_n"),
+        norm(vec_col, dim).alias("_n"),
     )
     return (
         pairs.join(
@@ -678,9 +642,7 @@ def lsh_cosine_dup_pairs(
             "a",
             "b",
             F.round(
-                cosine_from_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), dim
-                ),
+                cosine_from_norms("va", "vb", "_na", "_nb", dim),
                 6,
             ).alias("cos_sim"),
         )
@@ -794,7 +756,7 @@ def ivf_ann_topk(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            F.round(cosine(F.col("q_v"), F.col("c_v"), dim), 6).alias("cos_sim"),
+            F.round(cosine("q_v", "c_v", dim), 6).alias("cos_sim"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -911,7 +873,7 @@ def semantic_dedup(
         .select(
             id_col,
             "cell",
-            F.round(cosine(F.col(vec_col), F.col("_cent"), dim), 6).alias("centroid_sim"),
+            F.round(cosine(vec_col, "_cent", dim), 6).alias("centroid_sim"),
             F.coalesce(F.col("_dup"), F.lit(False)).alias("is_dup"),
         )
     )
@@ -1078,7 +1040,7 @@ def pq_adc_topk(
         # rerank is <= `rerank` rows per query — the HOF cosine's
         # interpreted cost is negligible there, while the unrolled form
         # would add ~400 plan nodes (see dot()); keep the compact tree
-        .withColumn("cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv")), 6))
+        .withColumn("cos_sim", F.round(cosine("_cv", "_qv"), 6))
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")
@@ -1167,7 +1129,7 @@ def ivfpq_topk(
             ),
             "query_id",
         )
-        .withColumn("cos_sim", F.round(cosine(F.col("_cv"), F.col("_qv")), 6))
+        .withColumn("cos_sim", F.round(cosine("_cv", "_qv"), 6))
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")

@@ -85,12 +85,6 @@ def punct_ratio(text: Column) -> Column:
     return F.round(_count_char_class(text, r"[^\w\s]") / F.greatest(F.char_length(text), F.lit(1)), 6)
 
 
-def upper_ratio(text: Column) -> Column:
-    return F.round(
-        _count_chars_in(text, "ABCDEFGHIJKLMNOPQRSTUVWXYZ") / F.greatest(F.char_length(text), F.lit(1)), 6
-    )
-
-
 def digit_ratio(text: Column) -> Column:
     return F.round(_count_chars_in(text, "0123456789") / F.greatest(F.char_length(text), F.lit(1)), 6)
 
@@ -103,12 +97,6 @@ def stopword_hits(text: Column, lang: str = "en") -> Column:
 
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return F.round(stopword_hits(text, lang) / F.greatest(word_count(text), F.lit(1)), 6)
-
-
-def avg_word_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.char_length(t))
-    return F.round(total / F.greatest(F.size(toks), F.lit(1)), 6)
 
 
 def quality_score(text: Column) -> Column:
@@ -245,15 +233,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def rolling_fingerprint(text: Column, window: int = 8) -> Column:
-    """Winnowing-style content fingerprint: min xxhash64 over the
-    word-`window`-gram shingles of the normalized text (robust to
-    local edits at the document ends)."""
-    from .dedup import shingles
-
-    return F.array_min(F.transform(shingles(text, window), lambda s: F.xxhash64(s)))
-
-
 def char_trigrams(text: Column) -> Column:
     """Distinct character 3-grams of the normalized text (array<string>).
 
@@ -262,7 +241,7 @@ def char_trigrams(text: Column) -> Column:
     window at every position) instead of a `transform(sequence(...),
     i -> substring(n, i, 3))`: higher-order functions are CodegenFallback
     (interpreted per element), and this expression runs once per
-    CHARACTER of the corpus — measured r11 at sf0.1: 14.6 s → 0.5 s for
+    CHARACTER of the corpus — measured at sf0.1: 14.6 s → 0.5 s for
     the trigram pass, byte-identical arrays on the whole corpus and on
     the <3-char edge cases (the `when` branch reproduces the old
     sequence(1,1)→substring(n,1,3) behavior: one possibly-short gram,

@@ -210,7 +210,7 @@ def dedup_minhash_det(spark, sf_dir):
     # capture) instead of transform(sequence, concat_ws(element_at×3)):
     # higher-order functions are CodegenFallback (interpreted per
     # element) and GenerateExec re-evaluates the lambda subtree without
-    # subexpression elimination — measured r11: this query 16.8 s →
+    # subexpression elimination — measured: this query 16.8 s →
     # ~6 s cold. Gram streams are identical (left-to-right windows at
     # every word start; the size<3 guard keeps the old empty-array
     # behavior, matching the oracle's generate_series(1, len-2))
@@ -450,8 +450,8 @@ def dedup_signature_health(spark, sf_dir):
     O(bucket²) pair stage, measure whether the signature source has
     enough effective bits — a degenerate signature makes EVERY banding
     scheme quadratic (measured: the byte-stat media stand-in hash
-    produced 443k collision pairs from 100k docs,
-    tools/scale_stress.py --media; SCALE.md Multimodal). One row:
+    produced 443k collision pairs from 100k docs; SCALE.md
+    Multimodal). One row:
     corpus size, distinct fingerprints, distinct_ratio, the largest
     (band, value) bucket the pair join would self-join, and its corpus
     share — computed over dedup_simhash_det's deterministic 60-bit
@@ -603,7 +603,7 @@ def _rademacher_sign_vec(seed: str, dims: int = 64) -> list[float]:
     inlined 64-term chains, replicated tables×planes times into ONE
     projection, overflow janino's 64 KB method limit — the failed
     whole-stage compile is retried (and re-fails) on EVERY execution,
-    measured r11 at 3× the query's actual work (OPTIMIZATION_r11.md
+    measured at 3× the query's actual work (OPTIMIZATION_r11.md
     Change 6)."""
     return [1.0 if _rademacher_sign(seed, i) else -1.0 for i in range(dims)]
 
@@ -650,7 +650,7 @@ def dedup_embedding_det(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    # r11: plane dots via the sign-vector array form (bit-identical to
+    # plane dots via the sign-vector array form (bit-identical to
     # the inlined ±term chains the oracle uses — see
     # _rademacher_sign_vec): the 24 inlined 64-term chains overflowed
     # janino's 64 KB method limit, and with this projection under BOTH
@@ -726,12 +726,12 @@ def dedup_embedding_det(spark, sf_dir):
     va = emb.select(
         F.col("vec_id").alias("a"),
         F.col("embedding").alias("va"),
-        S.norm(F.col("embedding"), 64).alias("_na"),
+        S.norm("embedding", 64).alias("_na"),
     )
     vb = emb.select(
         F.col("vec_id").alias("b"),
         F.col("embedding").alias("vb"),
-        S.norm(F.col("embedding"), 64).alias("_nb"),
+        S.norm("embedding", 64).alias("_nb"),
     )
     return (
         pairs.join(va, "a")
@@ -741,9 +741,7 @@ def dedup_embedding_det(spark, sf_dir):
             "b",
             "n_tables",
             F.round(
-                S.cosine_from_norms(
-                    F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), 64
-                ),
+                S.cosine_from_norms("va", "vb", "_na", "_nb", 64),
                 6,
             ).alias("cos_sim"),
         )
@@ -1403,14 +1401,14 @@ def stats_histogram(spark, sf_dir):
     spark.sql.statistics.histogram.enabled; the certified variant uses
     EXACT percentile boundaries so DuckDB reproduces it bit-for-bit).
     Boundaries come from the rank-selection exact percentile
-    (operators/aggregates.exact_percentiles_ranked — r11: bit-equal to
+    (operators/aggregates.exact_percentiles_ranked — bit-equal to
     F.percentile but distributed-sort-shaped instead of the built-in's
     single-buffer counts-map merge, which was both the sf0.1 bottleneck
     at 583k distinct values and the piece that cannot hold 100 TB of
     distinct doubles in one aggregation buffer); each row's bucket is
     1 + #(boundaries < v) — the 7 broadcast cut points compared in an
     unrolled codegen'd expression (the F.aggregate HOF fold is
-    CodegenFallback, r11 Change-1 disease), then one map-side-combined
+    CodegenFallback), then one map-side-combined
     groupBy on the bucket id over the spread scan (the sf0.1 parquet
     arrives as 3 row-group partitions; spread_small_scan is a no-op at
     scale)."""
@@ -1744,7 +1742,7 @@ def text_ngram_novelty(spark, sf_dir):
     n = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     t = F.split(n, " ")
     # word trigrams via one native-regex pass — same rewrite (and same
-    # exact-equivalence argument) as dedup_minhash_det; measured r11:
+    # exact-equivalence argument) as dedup_minhash_det; measured:
     # 14.4/13.2 s → ~4/3 s (the HOF form re-evaluated its lambda per
     # gram inside GenerateExec)
     grams = (
@@ -2648,7 +2646,7 @@ def stats_bootstrap(spark, sf_dir):
     table is 32 rows, driver-free. Output: point mean, bootstrap SE
     (stddev of replicate means), and the 2.5%/97.5% percentile CI."""
     o = _t(spark, sf_dir, "orders")
-    # r11: the ×32 explode feeds 32·N md5+conv evaluations into however
+    # the ×32 explode feeds 32·N md5+conv evaluations into however
     # many partitions the orders scan has — ONE at bench scale — so the
     # whole resample ran single-task. Spread the scan first (no-op when
     # orders scans wide; operators.similarity.spread_small_scan). The
@@ -3413,7 +3411,7 @@ GROUP BY as_of, seg ORDER BY as_of, seg
 def sim_topk(spark, sf_dir):
     """Brute-force cosine top-5 for 8 query vectors — the ANN exactness
     baseline. JVM-side zip_with/aggregate dot products; broadcast queries.
-    r11: the corpus side spreads across the cores before the O(N·Q)
+    The corpus side spreads across the cores before the O(N·Q)
     scoring pass (operators.similarity.spread_small_scan — no-op when
     the corpus scans wide; measured 1.9→0.5 s warm at sf0.1)."""
     emb = _t(spark, sf_dir, "embeddings").withColumn(
@@ -3591,7 +3589,7 @@ def sim_ranking_metrics(spark, sf_dir):
         # rr is rounded to 6dp per query on BOTH engines (house
         # convention, same as dcg): avg() below is order-sensitive, and
         # an unrounded last-ulp difference could flip the final 4dp
-        # round at a .00005 boundary (ADVICE r8).
+        # round at a .00005 boundary.
         F.round(
             F.coalesce(
                 F.max(F.when(F.col("rel") == 1, 1.0 / F.col("rank"))),
@@ -3816,7 +3814,7 @@ def sim_hybrid_rrf(spark, sf_dir):
     )
     lex = TX.bm25_topk(docs, "doc_id", "text", ["spark", "vector", "hash"], k=20)
     vec = (
-        # r11: spread the corpus side of the cosine leg (scan-shaped
+        # spread the corpus side of the cosine leg (scan-shaped
         # input — see spread_small_scan; measured 3.3→1.5 s warm)
         S.brute_force_topk(
             S.spread_small_scan(emb), emb.filter(F.col("vec_id") == 0),
@@ -4048,7 +4046,7 @@ def sim_ann_lsh_det(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    # r11: sign-vector array form — bit-identical to the inlined ±term
+    # sign-vector array form — bit-identical to the inlined ±term
     # chains the oracle replays (see _rademacher_sign_vec); the 32
     # inlined 64-term chains overflowed janino's 64 KB method limit and
     # the failed whole-stage compile was retried on every execution
@@ -4123,7 +4121,7 @@ def sim_ann_lsh_det(spark, sf_dir):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(S.cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
+            F.round(S.cosine("qv", "nv"), 6).alias("cos_sim"),
         )
     )
     w = W.partitionBy("query_id").orderBy(
@@ -4261,7 +4259,7 @@ def sim_ann_ivf_det(spark, sf_dir):
             "query_id",
             "qv",
             "cell",
-            F.round(S.cosine(F.col("qv"), F.col("cv")), 6).alias("cent_sim"),
+            F.round(S.cosine("qv", "cv"), 6).alias("cent_sim"),
         )
         .withColumn("pr", F.row_number().over(wprobe))
         .filter(F.col("pr") <= _ANN_IVF_DET_PROBE)
@@ -4273,7 +4271,7 @@ def sim_ann_ivf_det(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(S.cosine(F.col("qv"), F.col("embedding")), 6).alias(
+            F.round(S.cosine("qv", "embedding"), 6).alias(
                 "cos_sim"
             ),
         )
@@ -4402,7 +4400,7 @@ def sim_ann_pq_det(spark, sf_dir):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(S.cosine(F.col("qv"), F.col("nv")), 6).alias("cos_sim"),
+            F.round(S.cosine("qv", "nv"), 6).alias("cos_sim"),
         )
         .withColumn("rank", F.row_number().over(wr).cast("int"))
         .filter(F.col("rank") <= 5)
@@ -4798,12 +4796,11 @@ def text_langid_confusion(spark, sf_dir):
     emits the per-doc predictions; this rolls them into the
     quality-report form: true × predicted counts and per-true-language
     recall). Same deterministic scorer (TX.predict_lang), one (true,
-    pred) groupBy + a per-true-language total broadcast back. r12: the
+    pred) groupBy + a per-true-language total broadcast back. The
     totals derive from the confusion matrix itself (counts partition
     by construction) instead of a SECOND predict_lang pass over the
-    corpus — one full scoring scan removed (guide §2.4 / §1.2 "don't
-    compute things you throw away"; the two branches shared no
-    exchange: different grouping keys)."""
+    corpus, which shared no exchange with this one (different grouping
+    keys)."""
     docs = _t(spark, sf_dir, "documents")
     pred = docs.select("lang", TX.predict_lang(F.col("text")).alias("pred_lang"))
     cm = pred.groupBy("lang", "pred_lang").agg(F.count("*").alias("n"))

@@ -793,7 +793,7 @@ def q11_spec(spark, sf_dir, fraction: float | None = None):
             raise ValueError(
                 f"q11_spec: cannot derive the spec fraction (0.0001/SF) "
                 f"because the data directory basename {name!r} is not of "
-                f"the form 'sf<float>' (e.g. a tools/tpch_scale.py temp "
+                f"the form 'sf<float>' (e.g. a tools/scale_ladder.py rung "
                 f"instance). Pass fraction= explicitly for non-standard "
                 f"directories."
             ) from None

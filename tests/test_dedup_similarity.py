@@ -111,7 +111,7 @@ def test_cosine_matches_python(spark):
     )
     a = df.filter("id=1").select(F.col("v").alias("a"))
     b = df.filter("id=2").select(F.col("v").alias("b"))
-    got = a.crossJoin(b).select(S.cosine(F.col("a"), F.col("b")).alias("c")).head().c
+    got = a.crossJoin(b).select(S.cosine("a", "b").alias("c")).head().c
     expect = (1 * 3 + 2 * 2 + 3 * 1) / (math.sqrt(14) * math.sqrt(14))
     assert abs(got - expect) < 1e-12
 
@@ -160,7 +160,7 @@ def test_lsh_embedding_dedup_recall_vs_exact(spark):
 def test_cosine_dup_pairs_unscoped_row_guard(spark):
     """The unscoped all-pairs form broadcasts the b side, so its
     failure mode on an oversized input is a broadcast-build OOM — the
-    max_unscoped_rows guard (ADVICE r9) fails actionably instead, and
+    max_unscoped_rows guard fails actionably instead, and
     a scoped call never counts (the guard is unscoped-only)."""
     emb = load_table(spark, SF_SMALL, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
@@ -187,10 +187,10 @@ def test_ivf_ann_recall_and_determinism(spark):
         (r.query_id, r.neighbor_id)
         for r in S.brute_force_topk(emb, queries, k=5).collect()
     }
-    r1 = S.ivf_ann_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
-    r2 = S.ivf_ann_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
-    assert r1 == r2  # seeded k-means → reproducible
-    approx = {(r.query_id, r.neighbor_id) for r in r1}
+    first = S.ivf_ann_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
+    again = S.ivf_ann_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
+    assert first == again  # seeded k-means → reproducible
+    approx = {(r.query_id, r.neighbor_id) for r in first}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"IVF recall {recall:.2f}"
 

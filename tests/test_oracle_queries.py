@@ -165,7 +165,7 @@ def test_python_stages_run_once(registry_frames):
 def test_bench_membership_frozen():
     """BENCH_r01..r04 must stay cross-round comparable: the bench suite's
     membership and order are pinned by hash so a refactor cannot silently
-    change what `value` measures (VERDICT r3, next-round #6)."""
+    change what `value` measures."""
     import hashlib
 
     from bench import BENCH_QUERIES
@@ -250,10 +250,10 @@ def test_q11_spec_variant_matches_duckdb(spark, duck_small):
     # the spec default (0.0001/SF -> 0.1 at sf0.001) is empty on this
     # proxy — which is exactly why it is NOT a registry/driver query
     assert q11_spec(spark, SF_SMALL).count() == 0
-    # a non-'sf<float>' data dir (e.g. a tools/tpch_scale.py temp
+    # a non-'sf<float>' data dir (e.g. a tools/scale_ladder.py rung
     # instance) cannot derive the spec fraction — the error must be
-    # actionable, not a bare float() ValueError (ADVICE r8)
+    # actionable, not a bare float() ValueError
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="fraction= explicitly"):
-        q11_spec(spark, "/tmp/tpch_dim_abc123")
+        q11_spec(spark, "/tmp/scale_ladder_tpch_dim_0_abc123")

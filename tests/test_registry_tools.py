@@ -36,15 +36,19 @@ def test_time_pass_times_builds_and_records_errors(spark, monkeypatch):
     assert out["boom"] == {"error": "RuntimeError: builder failed"}
 
 
-@pytest.mark.parametrize("query", sorted(FAMILIES))
-def test_scale_ladder_rungs_are_invariant(spark, query):
-    records = list(ladder(spark, SF_SMALL, query, [0, 1]))
-    assert [r["mult"] for r in records] == [0, 1]
-    assert all(r["ok"] for r in records), records
-    assert records[0]["digest"] == records[1]["digest"]
-    assert records[1]["docs"] == records[0]["docs"] + 16_000
-    if FAMILIES[query].planted_pairs:
-        assert all(r["planted"] == 1_000 for r in records), records
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_scale_ladder_rungs_are_invariant(spark, family):
+    fam = FAMILIES[family]
+    records = list(ladder(spark, SF_SMALL, family, [0, 1]))
+    assert [(r["mult"], r["query"]) for r in records] == [
+        (m, q) for m in (0, 1) for q in fam.queries
+    ]
+    assert all(r["ok"] for r in records), records  # every digest equals its first rung's
+    n = len(fam.queries)
+    for base, grown in zip(records[:n], records[n:]):
+        assert grown[fam.table] == base[fam.table] + (fam.per_mult or base[fam.table])
+    if fam.planted_pairs:
+        assert all(r["planted"] == fam.planted_pairs for r in records), records
 
 
 def test_oracle_sweep_stops_when_session_is_lost(spark, monkeypatch, capsys):

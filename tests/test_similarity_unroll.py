@@ -1,4 +1,4 @@
-"""Bit-equality of the r11 unrolled fixed-dim vector kernels vs the
+"""Bit-equality of the unrolled fixed-dim vector kernels vs the
 higher-order-function forms (operators/similarity.dot/norm/cosine with and
 without `dim`).
 
@@ -36,8 +36,8 @@ def _pairs(df, cast):
 @pytest.mark.parametrize("cast", [True, False], ids=["double", "float"])
 def test_cosine_unrolled_bit_equal_on_corpus(emb, cast):
     j = _pairs(emb.limit(80), cast)
-    hof = j.select("a", "b", S.cosine(F.col("va"), F.col("vb")).alias("c"))
-    unr = j.select("a", "b", S.cosine(F.col("va"), F.col("vb"), 64).alias("c"))
+    hof = j.select("a", "b", S.cosine("va", "vb").alias("c"))
+    unr = j.select("a", "b", S.cosine("va", "vb", 64).alias("c"))
     rows_h = {(r.a, r.b): r.c for r in hof.collect()}
     rows_u = {(r.a, r.b): r.c for r in unr.collect()}
     assert rows_h == rows_u  # exact ==, not approx: the contract is bit-equality
@@ -46,10 +46,10 @@ def test_cosine_unrolled_bit_equal_on_corpus(emb, cast):
 def test_dot_norm_unrolled_bit_equal(emb):
     v = emb.limit(50).select(F.col("embedding").cast("array<double>").alias("v"))
     both = v.select(
-        S.dot(F.col("v"), F.col("v")).alias("d_hof"),
-        S.dot(F.col("v"), F.col("v"), 64).alias("d_unr"),
-        S.norm(F.col("v")).alias("n_hof"),
-        S.norm(F.col("v"), 64).alias("n_unr"),
+        S.dot("v", "v").alias("d_hof"),
+        S.dot("v", "v", 64).alias("d_unr"),
+        S.norm("v").alias("n_hof"),
+        S.norm("v", 64).alias("n_unr"),
     )
     for r in both.collect():
         assert r.d_hof == r.d_unr
@@ -63,8 +63,8 @@ def test_cosine_unrolled_zero_and_null_vectors(spark):
         "id long, a array<double>, b array<double>",
     )
     out = df.select(
-        S.cosine(F.col("a"), F.col("b")).alias("hof"),
-        S.cosine(F.col("a"), F.col("b"), 4).alias("unr"),
+        S.cosine("a", "b").alias("hof"),
+        S.cosine("a", "b", 4).alias("unr"),
     ).collect()
     assert out[0].hof == 0.0 and out[0].unr == 0.0
     # NULL vector: d = norm(a)*NULL = NULL, `when(NULL != 0)` is falsy →
@@ -72,17 +72,23 @@ def test_cosine_unrolled_zero_and_null_vectors(spark):
     assert out[1].hof == 0.0 and out[1].unr == 0.0
 
 
-def test_unrolled_kernel_rejects_non_plain_argument(emb):
-    """With `dim` the kernels render as SQL text over plain column
-    references; any other argument is an error, not a slow path."""
-    j = emb.limit(5).select(F.col("embedding").alias("v"), F.col("embedding").alias("va x"))
-    for bad in (F.col("`va x`"), F.element_at(F.array(F.col("v")), 1)):
-        with pytest.raises(ValueError, match="plain column reference"):
-            S.cosine(F.col("v"), bad, 64)
-        with pytest.raises(ValueError, match="plain column reference"):
-            S.norm(bad, 64)
-    # without `dim` the same arguments take the higher-order form
-    assert j.select(S.cosine(F.col("v"), F.col("`va x`")).alias("c")).count() == 5
+def test_vector_kernels_quote_column_names(emb):
+    """The kernels take column names and render them as quoted SQL
+    identifiers, so a name that is not a bare identifier still resolves
+    in both forms."""
+    j = emb.limit(5).select(
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.col("embedding").cast("array<double>").alias("va x"),
+    )
+    out = j.select(
+        S.cosine("v", "va x").alias("hof"),
+        S.cosine("v", "va x", 64).alias("unr"),
+        S.norm("va x", 64).alias("n"),
+        S.norm("v").alias("nv"),
+    ).collect()
+    assert len(out) == 5
+    for r in out:
+        assert r.hof == r.unr and r.n == r.nv
 
 
 def test_text_rendered_unroll_matches_column_tree(emb):
@@ -93,7 +99,7 @@ def test_text_rendered_unroll_matches_column_tree(emb):
     a = emb.limit(60).select(F.col("vec_id").alias("a"), v.alias("va"))
     b = emb.limit(60).select(F.col("vec_id").alias("b"), v.alias("vb"))
     j = a.crossJoin(F.broadcast(b)).filter(F.col("a") < F.col("b"))
-    text = j.select("a", "b", S.cosine(F.col("va"), F.col("vb"), 64).alias("c"))
+    text = j.select("a", "b", S.cosine("va", "vb", 64).alias("c"))
     e = F.expr("aggregate(array(), 0.0D, (acc, v) -> acc)")
     for k in range(64):
         e = e + F.get(F.col("va"), k) * F.get(F.col("vb"), k)
@@ -159,10 +165,9 @@ def test_spread_no_op_is_logged(spark, caplog):
 
 
 def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
-    """r12: the pre-join-norm form (cosine_from_norms + eject seed —
-    the empty-array fold IS 0.0D) must be bit-equal to the inline
-    cosine, with plain and computed norm columns, including the zero-
-    vector d==0 branch."""
+    """The pre-join-norm form (cosine_from_norms + eject seed — the
+    empty-array fold IS 0.0D) must be bit-equal to the inline cosine,
+    including the zero-vector d==0 branch."""
     df = emb.limit(80).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -174,39 +179,21 @@ def test_cosine_from_norms_bit_equal_on_corpus(emb, spark):
     a = df.select(
         F.col("vec_id").alias("a"),
         F.col("embedding").alias("va"),
-        S.norm(F.col("embedding"), 64).alias("_na"),
+        S.norm("embedding", 64).alias("_na"),
     )
     b = df.select(
         F.col("vec_id").alias("b"),
         F.col("embedding").alias("vb"),
-        S.norm(F.col("embedding"), 64).alias("_nb"),
+        S.norm("embedding", 64).alias("_nb"),
     )
     j = a.crossJoin(F.broadcast(b)).filter(F.col("a") < F.col("b"))
-    inline = j.select("a", "b", S.cosine(F.col("va"), F.col("vb"), 64).alias("c"))
-    # text path: all four args plain column refs
+    inline = j.select("a", "b", S.cosine("va", "vb", 64).alias("c"))
     pre = j.select(
-        "a", "b",
-        S.cosine_from_norms(
-            F.col("va"), F.col("vb"), F.col("_na"), F.col("_nb"), 64
-        ).alias("c"),
-    )
-    # computed norm column (_na * 1.0 is an IEEE identity): only the
-    # vectors must be plain references
-    pre_fb = j.select(
-        "a", "b",
-        S.cosine_from_norms(
-            F.col("va"),
-            F.col("vb"),
-            F.col("_na") * F.lit(1.0),
-            F.col("_nb"),
-            64,
-        ).alias("c"),
+        "a", "b", S.cosine_from_norms("va", "vb", "_na", "_nb", 64).alias("c")
     )
     rows_i = {(r.a, r.b): r.c for r in inline.collect()}
     rows_p = {(r.a, r.b): r.c for r in pre.collect()}
-    rows_f = {(r.a, r.b): r.c for r in pre_fb.collect()}
     assert rows_i == rows_p  # exact ==: bit-equality contract
-    assert rows_i == rows_f  # _na*1.0 is IEEE-identity
 
 
 def _physical_nodes(plan, fused=False):

@@ -107,6 +107,21 @@ def test_minhash_bands(docs):
     _assert_same_plan(D.minhash_bands(hs, num_hashes, bands), banded)
 
 
+def test_simhash_signatures(docs):
+    ex = D.hashed_shingle_sets(docs, "doc_id", "text", 3).select("_id", F.explode("_hs").alias("h"))
+    votes = ex.groupBy("_id").agg(
+        F.count("*").alias("_n"),
+        *[F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1))).alias(f"_b{i}") for i in range(63)],
+    )
+    sh = None
+    for i in range(63):
+        bit = F.when(F.col(f"_b{i}") * 2 > F.col("_n"), F.lit(2**i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        sh = bit if sh is None else sh + bit
+    _assert_same_plan(D.simhash_signatures(docs, "doc_id", "text"), votes.select("_id", sh.alias("sh")))
+
+
 def test_bucket_pairs_and_jaccard(spark):
     buckets = spark.createDataFrame(
         [([1, 4, 9], [1, 2, 3], [2, 3, 5])], "_ids array<bigint>, sh_a array<bigint>, sh_b array<bigint>"
@@ -143,7 +158,11 @@ def test_hof_vector_kernels(emb):
 
     d = norm(a) * norm(b)
     _assert_same_plan(
-        df.select(S.dot(a, b).alias("d"), S.norm(a).alias("n"), S.cosine(a, b).alias("c")),
+        df.select(
+            S.dot("embedding", "v2").alias("d"),
+            S.norm("embedding").alias("n"),
+            S.cosine("embedding", "v2").alias("c"),
+        ),
         df.select(
             dot.alias("d"),
             norm(a).alias("n"),
@@ -153,7 +172,7 @@ def test_hof_vector_kernels(emb):
     df = df.select("embedding", "v2", F.lit(1.0).alias("na"), F.lit(2.0).alias("nb"))
     d = F.col("na") * F.col("nb")
     _assert_same_plan(
-        df.select(S.cosine_from_norms(a, b, F.col("na"), F.col("nb")).alias("c")),
+        df.select(S.cosine_from_norms("embedding", "v2", "na", "nb").alias("c")),
         df.select(F.when(d != 0, dot / d).otherwise(F.lit(0.0)).alias("c")),
     )
 
